@@ -16285,14 +16285,14 @@ def _kcore_sql(k: int = 3, rounds: int = 6, bound: int = 180) -> str:
         a0 AS (SELECT i AS id FROM d)"""]
     for r in range(1, rounds + 1):
         parts.append(f""",
-        deg{r} AS (
+        deg{r} AS MATERIALIZED (
           SELECT u.dst AS id, COUNT(*) AS c
           FROM und u
           JOIN a{r-1} s ON s.id = u.src
           JOIN a{r-1} t ON t.id = u.dst
           GROUP BY 1
         ),
-        a{r} AS (
+        a{r} AS MATERIALIZED (
           SELECT a.id FROM a{r-1} a
           JOIN deg{r} g ON g.id = a.id WHERE g.c >= {k}
         )""")

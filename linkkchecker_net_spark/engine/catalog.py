@@ -11,7 +11,7 @@ Layout:
     ckpt_dir/
       init/MANIFEST.json + frontier/ + seen_delta/
       epoch=00000K/MANIFEST.json + frontier/ + seen_delta/ + results/
-                   + page_meta/ + metrics/ + filters/
+                   + page_meta/ (+ seen_full/ on a compaction epoch)
 
 The MANIFEST is written last via atomic rename — a directory without a
 manifest is an incomplete epoch and is ignored on resume (the Spark analog

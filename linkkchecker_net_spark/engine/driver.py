@@ -21,10 +21,7 @@ from pyspark.sql import functions as F
 
 from linkkchecker_net_spark import schemas
 from linkkchecker_net_spark.engine import catalog, epoch as epoch_mod
-from linkkchecker_net_spark.engine.filters import (
-    build_bloom,
-    build_partitioned_filters,
-)
+from linkkchecker_net_spark.engine.filters import build_bloom
 from linkkchecker_net_spark.kernels.canonicalize import (
     authority_of,
     base_prefix_of,
@@ -42,8 +39,6 @@ class CrawlConfig:
     # 10^8 budget on a 10^10-URL host must bound that host.
     default_budget: int | None = None
     max_epochs: int = 1000
-    snapshot_filters: bool = False  # cuckoo seen-filter snapshots per epoch
-    filter_partitions: int = 8
     # broadcast the politeness-bounded batch into the fetch join (web never
     # shuffles).  Above the threshold the fetch join becomes a plain
     # left-outer shuffle join — with the body column split out of the fetch
@@ -74,28 +69,6 @@ class CrawlConfig:
     # compact seen deltas into one snapshot when this many accumulate —
     # keeps the anti-join read fan-in bounded across long crawls
     seen_compact_every: int = 8
-    # SURVEY §4 storage-partitioned anti-join: ALSO maintain the seen set
-    # as a parquet table bucketed by url_hash, so the >threshold exchange
-    # anti-join reads the seen side pre-partitioned — zero exchange on the
-    # (10^10-row) seen side, only the politeness-bounded candidate side
-    # shuffles into the bucketing.  (The Iceberg analog is
-    # bucket(url_hash) storage partitioning; plain-parquet bucketed tables
-    # are the sandbox's equivalent.)  The per-epoch delta dirs remain the
-    # resume checkpoint; the table carries the epoch column so resume
-    # reads filter to epochs <= current.
-    bucketed_seen: bool = False
-    seen_buckets: int = 32
-    # SURVEY §4 / north-star "frontier tables keyed by (host_hash,
-    # priority, crawl_depth)": ALSO maintain each epoch's frontier as a
-    # parquet table bucketed by host, so the politeness window (W1) reads
-    # the frontier pre-partitioned — NO exchange of the (10^10-row)
-    # frontier into the per-host rank; only the small robots dim
-    # broadcast-joins in.  The plain per-epoch frontier dir remains the
-    # resume artifact; the bucketed table is a derived copy, rebuilt on
-    # demand.  (Iceberg analog: bucket(host) partitioning on the frontier
-    # table.)
-    bucketed_frontier: bool = False
-    frontier_buckets: int = 32
     # W2 rank strategy: epochs whose ESTIMATED rank-input (survivor) count
     # falls below this use one row_number window (zero extra jobs); above
     # it the parallel bucketed-sort + offsets path.  The estimate is
@@ -152,124 +125,6 @@ class CrawlDriver:
         # epoch from the live frontier, so a resumed driver re-converges
         # from the same frontier without any extra checkpoint state
         self._trap_hosts: set[str] = set()
-        if config.bucketed_seen or config.bucketed_frontier:
-            # a HashPartitioning on a SUBSET of the join keys (url_hash of
-            # [url_hash, url]) must be allowed to satisfy the join's
-            # clustering for the bucketed scan to skip its exchange
-            spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-
-    # ------------------------------------------------- bucketed seen table
-    def _seen_table(self) -> str:
-        import hashlib
-
-        h = hashlib.md5(self.cfg.ckpt_dir.encode()).hexdigest()[:10]
-        return f"seen_bucketed_{h}"
-
-    def _ensure_seen_table(self, reset: bool = False) -> None:
-        tbl = self._seen_table()
-        path = os.path.join(self.cfg.ckpt_dir, "seen_bucketed")
-        if reset:
-            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            import shutil
-
-            shutil.rmtree(path, ignore_errors=True)
-        self.spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {tbl} "
-            "(url_hash BIGINT, url STRING, first_depth INT, epoch INT) "
-            f"USING PARQUET CLUSTERED BY (url_hash) SORTED BY (url_hash) "
-            f"INTO {self.cfg.seen_buckets} BUCKETS LOCATION '{path}'"
-        )
-
-    def _append_seen_bucketed(self, delta: DataFrame) -> None:
-        delta.select("url_hash", "url", "first_depth", "epoch").write.mode(
-            "append"
-        ).insertInto(self._seen_table())
-
-    def _rebuild_seen_bucketed(self, snapshot: DataFrame) -> None:
-        """Compaction for the bucketed seen table: rewrite it from the
-        compacted snapshot so file fan-in stays O(buckets) instead of
-        growing as buckets x epochs across a long crawl.  repartition on
-        the bucket hash first -> each task holds exactly one bucket ->
-        one file per bucket after the rewrite."""
-        self._ensure_seen_table(reset=True)
-        nb = self.cfg.seen_buckets
-        (
-            snapshot.select("url_hash", "url", "first_depth", "epoch")
-            .repartition(nb, F.pmod(F.hash("url_hash"), F.lit(nb)))
-            .sortWithinPartitions("url_hash")
-            .write.mode("append")
-            .insertInto(self._seen_table())
-        )
-
-    # -------------------------------------------- bucketed frontier table
-    def _frontier_table(self, epoch: int) -> str:
-        import hashlib
-
-        h = hashlib.md5(self.cfg.ckpt_dir.encode()).hexdigest()[:10]
-        return f"frontier_bk_{h}_e{epoch + 1}"  # table holds epoch+1's input
-
-    def _write_frontier_bucketed(self, frontier, epoch: int) -> None:
-        """Derive the next epoch's W1 input: one file per host-bucket,
-        sorted by the politeness order key.  repartition on the SAME hash
-        Spark buckets with (Murmur3 via F.hash) → each task holds exactly
-        one bucket → one file per bucket, so the scan reports both the
-        hash partitioning AND the sort order.
-
-        `frontier` is a DataFrame (the epoch's cached intermediates — lets
-        this write run INSIDE the concurrent epoch-write pool, not as a
-        trailing serial job re-reading the just-written parquet) or a
-        checkpoint path (init-time)."""
-        from pyspark.sql import functions as F2
-
-        tbl = self._frontier_table(epoch)
-        nb = self.cfg.frontier_buckets
-        path = os.path.join(self.cfg.ckpt_dir, f"frontier_bucketed_e{epoch + 1}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        df = (
-            self.spark.read.parquet(frontier)
-            if isinstance(frontier, str)
-            else frontier
-        )
-        cols = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        self.spark.sql(
-            f"CREATE TABLE {tbl} ({cols}) USING PARQUET "
-            f"CLUSTERED BY (host) "
-            f"SORTED BY (host, priority, crawl_depth, discovery_rank) "
-            f"INTO {nb} BUCKETS LOCATION '{path}'"
-        )
-        (
-            df.repartition(nb, F2.pmod(F2.hash("host"), F2.lit(nb)))
-            .sortWithinPartitions("host", "priority", "crawl_depth", "discovery_rank")
-            .write.mode("append")
-            .insertInto(tbl)
-        )
-        # the previous epoch's derived table is dead state — drop it
-        if epoch >= 0:
-            old = self._frontier_table(epoch - 1)
-            self.spark.sql(f"DROP TABLE IF EXISTS {old}")
-            shutil.rmtree(
-                os.path.join(self.cfg.ckpt_dir, f"frontier_bucketed_e{epoch}"),
-                ignore_errors=True,
-            )
-
-    def _read_frontier(self, state: dict) -> DataFrame:
-        """Frontier input for this epoch: the bucketed table when enabled
-        and present (W1 reads it pre-partitioned by host — no exchange),
-        else the plain checkpoint parquet."""
-        if self.cfg.bucketed_frontier:
-            tbl = self._frontier_table(state["next_epoch"] - 1)
-            try:
-                if self.spark.catalog.tableExists(tbl):
-                    return self.spark.table(tbl)
-            except Exception:
-                pass
-        return catalog.read_table(self.spark, state["frontier_path"])
-
     def _politeness_flags(self) -> tuple[bool, bool]:
         """(skip_politeness, skip_robots): with an empty robots table and the
         EXPLICIT unbounded sentinel (default_budget=None), W1 and F10 are
@@ -359,11 +214,6 @@ class CrawlDriver:
             F.lit(-1).alias("epoch"),
         )
         catalog.write_table(init_delta, os.path.join(d, "seen_delta"))
-        if self.cfg.bucketed_seen:
-            self._ensure_seen_table(reset=True)
-            self._append_seen_bucketed(init_delta)
-        if self.cfg.bucketed_frontier:
-            self._write_frontier_bucketed(os.path.join(d, "frontier"), -1)
         manifest = {
             "next_rank": rank,
             "frontier_count": len(rows),
@@ -440,11 +290,6 @@ class CrawlDriver:
             F.lit(-1).alias("epoch"),
         )
         catalog.write_table(init_delta, os.path.join(d, "seen_delta"))
-        if self.cfg.bucketed_seen:
-            self._ensure_seen_table(reset=True)
-            self._append_seen_bucketed(init_delta)
-        if self.cfg.bucketed_frontier:
-            self._write_frontier_bucketed(os.path.join(d, "frontier"), -1)
         n = int(obs.get["n"])
         from linkkchecker_net_spark.kernels.canonicalize import (
             authority_udf,
@@ -523,21 +368,13 @@ class CrawlDriver:
         ck, cfg, spark = self.cfg.ckpt_dir, self.cfg, self.spark
         e = state["next_epoch"]
         t0 = time.monotonic()
-        prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-
-        def _mark(label, _t=[time.monotonic()]):
-            now = time.monotonic()
-            if prof:
-                print(f"    [epoch {e}] {label}: {now - _t[0]:.2f}", flush=True)
-            _t[0] = now
-
         # NOTE: re-reading the (small, coalesced) frontier parquet each epoch
         # is deliberate — it truncates the logical plan at every epoch
         # boundary.  Chaining the live DataFrame across epochs grows the
         # plan tree exponentially with depth (Catalyst re-optimizes, and
         # even explainString OOMs, by ~epoch 10); the read itself is lazy
         # and folds into the next epoch's first job.
-        frontier = self._read_frontier(state)
+        frontier = catalog.read_table(spark, state["frontier_path"])
         skip_pol, skip_rob = self._politeness_flags()
         trap_budgets = None
         if cfg.trap_explosion_threshold is not None and self._trap_hosts:
@@ -552,14 +389,7 @@ class CrawlDriver:
             state.get("seen_total", 0) + state["frontier_count"]
             <= cfg.broadcast_seen_threshold
         )
-        if cfg.bucketed_seen and not broadcast_seen:
-            # storage-partitioned anti-join: the bucketed scan arrives
-            # hash-partitioned on url_hash — no exchange on the seen side
-            self._ensure_seen_table()
-            seen = self.spark.table(self._seen_table()).filter(F.col("epoch") <= e - 1)
-        else:
-            seen_paths = self._seen_paths(state, e - 1)
-            seen = spark.read.parquet(*seen_paths)
+        seen = spark.read.parquet(*self._seen_paths(state, e - 1))
         bloom_bcast = None
         if cfg.use_bloom and not broadcast_seen:
             blob = build_bloom(
@@ -600,7 +430,6 @@ class CrawlDriver:
         )
         self._last_small_rank = small_rank  # observability for tests
 
-        _mark("plan_epoch_dag")
         ed = catalog.epoch_dir(ck, e)
         os.makedirs(ed, exist_ok=True)
         # the expensive shared stages (fetch join, candidate pipeline) are
@@ -644,50 +473,19 @@ class CrawlDriver:
         ).repartition(nparts)
         import concurrent.futures as _cf
 
-        def _timed_write(label, df, path):
-            ts = time.monotonic()
-            catalog.write_table(df, path)
-            if prof:
-                print(
-                    f"    [epoch {e}] write {label}: start+{ts - t0:.2f}"
-                    f" dur {time.monotonic() - ts:.2f}",
-                    flush=True,
-                )
-
-        # the bucketed seen/frontier derivations consume the SAME persisted
-        # intermediates as the checkpoint writes — they join the concurrent
-        # pool (r2 ran them serially after it: two extra Spark jobs of pure
-        # per-epoch wall time, a flat cost that caps scaling efficiency)
-        with _cf.ThreadPoolExecutor(6) as pool:
+        writes = {
+            "results": results_obs,
+            "seen_delta": res.seen_delta.repartition(nparts),
+            "page_meta": res.page_meta.repartition(nparts),
+            "frontier": frontier_obs,
+        }
+        with _cf.ThreadPoolExecutor(len(writes)) as pool:
             futs = [
-                pool.submit(
-                    _timed_write, "results", results_obs, os.path.join(ed, "results")
-                ),
-                pool.submit(
-                    _timed_write,
-                    "seen_delta",
-                    res.seen_delta.repartition(nparts),
-                    os.path.join(ed, "seen_delta"),
-                ),
-                pool.submit(
-                    _timed_write,
-                    "page_meta",
-                    res.page_meta.repartition(nparts),
-                    os.path.join(ed, "page_meta"),
-                ),
-                pool.submit(
-                    _timed_write, "frontier", frontier_obs, os.path.join(ed, "frontier")
-                ),
+                pool.submit(catalog.write_table, df, os.path.join(ed, name))
+                for name, df in writes.items()
             ]
-            if cfg.bucketed_seen:
-                futs.append(pool.submit(self._append_seen_bucketed, res.seen_delta))
-            if cfg.bucketed_frontier:
-                futs.append(
-                    pool.submit(self._write_frontier_bucketed, new_frontier, e)
-                )
             for f in futs:
                 f.result()
-        _mark("write_results_and_state")
         # politeness audit (r3 verdict item 7): when pacing is on, record
         # the per-epoch same-host min fetch gap in the manifest, so a
         # production politeness audit is a metrics() read, not a debug run.
@@ -753,13 +551,6 @@ class CrawlDriver:
         )
         elapsed = time.monotonic() - t0
 
-        if cfg.snapshot_filters:
-            build_partitioned_filters(
-                spark.read.parquet(*catalog.seen_delta_paths(ck, e)),
-                os.path.join(ed, "filters"),
-                partitions=cfg.filter_partitions,
-            )
-
         # compact the seen set when the delta fan-in gets wide
         seen_base = state.get("seen_base")
         seen_base_epoch = state.get("seen_base_epoch", -2)
@@ -768,10 +559,6 @@ class CrawlDriver:
             full = os.path.join(ed, "seen_full")
             catalog.write_table(spark.read.parquet(*cur_paths), full)
             seen_base, seen_base_epoch = full, e
-            if cfg.bucketed_seen:
-                # keep the bucketed table's file fan-in O(buckets): rewrite
-                # it from the snapshot on the same compaction cadence
-                self._rebuild_seen_bucketed(spark.read.parquet(full))
 
         # observed survivors-per-fetched-page: ranks are consumed exactly by
         # this epoch's W2 input (gated results + new frontier entries), so

@@ -741,25 +741,7 @@ def run_epoch(
         )
         batch_needs_pin = True
     if truncate_plans:
-        import os as _os
-        import time as _time
-
-        if _os.environ.get("SPARK_GRAFT_PROFILE") == "1":
-            _pin_n = [0]
-
-            def pin(df):
-                t0 = _time.monotonic()
-                out = df.localCheckpoint(eager=True)
-                _pin_n[0] += 1
-                print(
-                    f"    [epoch {epoch}] pin#{_pin_n[0]}:"
-                    f" {_time.monotonic() - t0:.2f}",
-                    flush=True,
-                )
-                return out
-
-        else:
-            pin = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
+        pin = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
     else:
         pin = None
     # The batch (politeness-bounded, body-free) feeds the fetch join, the

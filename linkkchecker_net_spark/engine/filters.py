@@ -1,4 +1,4 @@
-"""URL-seen membership filters: broadcast bloom + partitioned cuckoo.
+"""URL-seen membership filters: broadcast bloom + cuckoo.
 
 North-rule components (BASELINE.json north_star): the seen set at 10^10
 URLs is too large to broadcast exactly, so the anti-join is layered:
@@ -9,11 +9,9 @@ URLs is too large to broadcast exactly, so the anti-join is layered:
      discovered URLs on a growing crawl are new);
   2. bloom-POSITIVE candidates (true dupes + ~1% false positives) go
      through the exact parquet anti-join;
-  3. **cuckoo filters**, partitioned by pmod(url_hash, P), hold the same
-     membership per partition with deletion support and ~2 bytes/key —
-     snapshotted to the checkpoint per epoch as the seen-filter lineage
-     artifact (BASELINE.json: "frontier offset, seen-filter snapshot,
-     fetch metrics").
+  3. `CuckooFilter` holds the same membership with deletion support and
+     ~2 bytes/key.  The crawl does not read it yet: resume rebuilds the
+     seen set from the `seen_delta/` and `seen_full/` checkpoint tables.
 
 The reference's analog is the lock-guarded Dictionary claim
 (/root/reference/SpiderInterface/ScanResults.cs:12-45) — exact, in-memory,
@@ -22,8 +20,6 @@ layering.  All operations are vectorized numpy over int64 key arrays.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -77,7 +73,7 @@ class BloomFilter:
             out &= (word >> (idx & 63).view(np.uint64)) & _U64(1) != 0
         return out
 
-    # ---- serialization (broadcast / snapshot) ----
+    # ---- serialization (broadcast) ----
     def to_bytes(self) -> bytes:
         header = np.array([self.m, self.k], dtype=np.int64).tobytes()
         return header + self.bits.tobytes()
@@ -125,9 +121,8 @@ class CuckooFilter:
         The common no-eviction path is fully vectorized: one greedy bulk
         claim into each key's primary bucket, a second into the alternate
         bucket for the spillover, and only the (rare, near-full-filter)
-        remainder walks the per-key eviction loop.  At snapshot-partition
-        sizes (10^8-10^9 keys/partition at the 10^10 design point) the
-        per-key Python loop was the builder's bottleneck."""
+        remainder walks the per-key eviction loop.  At 10^8-10^9 keys per
+        filter a per-key Python loop would be the bottleneck."""
         k64 = _as_u64(keys)
         fps = self._fp(k64)
         i1s = self._i1(k64)
@@ -398,45 +393,6 @@ def build_bloom(
     return out.to_bytes()
 
 
-def build_partitioned_filters(seen_df, out_dir: str, partitions: int = 8) -> dict:
-    """Cuckoo filter per pmod(url_hash, P) partition, snapshotted to disk —
-    the per-partition seen-filter lineage artifact of the north rule."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def build(key, pdf: pd.DataFrame):
-        cf = CuckooFilter(max(len(pdf) * 2, 64))
-        cf.add(pdf["url_hash"].to_numpy(dtype=np.int64))
-        return pd.DataFrame({"p": [int(key[0])], "blob": [cf.to_bytes()], "n": [len(pdf)]})
-
-    rows = (
-        seen_df.select("url_hash")
-        .withColumn("p", F.pmod(F.col("url_hash"), F.lit(partitions)))
-        .groupBy("p")
-        .applyInPandas(build, "p int, blob binary, n long")
-        .collect()
-    )
-    meta = {}
-    for r in rows:
-        path = os.path.join(out_dir, f"cuckoo_p{r['p']:04d}.bin")
-        with open(path, "wb") as f:
-            f.write(bytes(r["blob"]))
-        meta[int(r["p"])] = {"path": path, "n": int(r["n"])}
-    return meta
-
-
-def load_partitioned_filters(out_dir: str) -> dict[int, CuckooFilter]:
-    out = {}
-    for name in sorted(os.listdir(out_dir)):
-        if name.startswith("cuckoo_p") and name.endswith(".bin"):
-            p = int(name[len("cuckoo_p") : -4])
-            with open(os.path.join(out_dir, name), "rb") as f:
-                out[p] = CuckooFilter.from_bytes(f.read())
-    return out
-
-
 def bloom_advisor(
     urls: DataFrame, target_fp_ppm: int = 1000, round_dp: int = 6
 ) -> DataFrame:
@@ -484,8 +440,7 @@ def cuckoo_advisor(
 ) -> DataFrame:
     """Sizing calculator for the frontier's cuckoo seen-filter layer —
     the companion of `bloom_advisor` for the OTHER filter this engine's
-    north rule names (`CuckooFilter` above, snapshotted per partition by
-    `build_partitioned_filters`).  Fan et al. 2014 ("Cuckoo Filter:
+    north rule names (`CuckooFilter` above).  Fan et al. 2014 ("Cuckoo Filter:
     Practically Better Than Bloom", CoNEXT) arithmetic: with bucket size
     b and target false-positive rate p, the fingerprint needs
     f = ceil(log2(2b/p)) bits; at b=4 the achievable load factor is

@@ -783,7 +783,9 @@ def pca_top_component(
     partial-sum ORDER differs from the old agg only within the double
     rounding noise (~1e-13) that the 6-dp rounding boundary already
     absorbs (Spark's own partition-order variation sits in the same
-    envelope).
+    envelope).  Null elements are skipped (SQL sum/avg semantics), a
+    vector whose length is not D raises, and an empty corpus has zero
+    moments: mean 0, pc1 the start vector, var_explained 0.
 
     Driver part (metadata-sized, the kmeans-centroid precedent): the
     D×D matrix collects and ``iters`` power iterations run in plain
@@ -801,49 +803,65 @@ def pca_top_component(
 
     def _moments(batches):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         S = np.zeros((D, D), dtype=np.float64)
         m = np.zeros(D, dtype=np.float64)
+        c = np.zeros(D, dtype=np.int64)
         n = 0
         for batch in batches:
             col = batch.column(0)
+            if col.null_count:
+                col = col.filter(col.is_valid())
             if len(col) == 0:
                 continue
-            if col.null_count == 0:
-                flat = col.flatten().to_numpy(zero_copy_only=False)
-                X = np.asarray(flat, dtype=np.float64).reshape(-1, D)
-            else:
-                rows = [r for r in col.to_pylist() if r is not None]
-                if not rows:
-                    continue
-                X = np.asarray(rows, dtype=np.float64)
+            lens = pc.list_value_length(col).to_numpy()
+            if (lens != D).any():
+                raise ValueError(
+                    f"pca_top_component: ragged vectors, expected {D} "
+                    f"elements per row, got lengths {sorted(set(lens.tolist()))}"
+                )
+            # null ELEMENTS contribute nothing to the sums (the SQL
+            # sum/avg semantics); the per-dim mean divides by the
+            # non-null count, the second moment by the row count
+            flat = col.flatten()
+            valid = flat.is_valid().to_numpy(zero_copy_only=False).reshape(-1, D)
+            X = flat.fill_null(0.0).to_numpy(zero_copy_only=False).reshape(-1, D)
             S += X.T @ X
             m += X.sum(axis=0)
+            c += valid.sum(axis=0)
             n += X.shape[0]
         yield pa.record_batch(
             [
                 pa.array([S.ravel().tolist()], pa.list_(pa.float64())),
                 pa.array([m.tolist()], pa.list_(pa.float64())),
+                pa.array([c.tolist()], pa.list_(pa.int64())),
                 pa.array([n], pa.int64()),
             ],
-            names=["s", "m", "n"],
+            names=["s", "m", "c", "n"],
         )
 
     parts = (
         vectors.select(F.col(vec_col).cast("array<double>").alias("v"))
-        .mapInArrow(_moments, "s array<double>, m array<double>, n long")
+        .mapInArrow(
+            _moments, "s array<double>, m array<double>, c array<long>, n long"
+        )
         .collect()
     )
     S = np.zeros((D, D), dtype=np.float64)
     msum = np.zeros(D, dtype=np.float64)
+    csum = np.zeros(D, dtype=np.int64)
     n_total = 0
     for r in parts:
         S += np.asarray(r["s"], dtype=np.float64).reshape(D, D)
         msum += np.asarray(r["m"], dtype=np.float64)
+        csum += np.asarray(r["c"], dtype=np.int64)
         n_total += int(r["n"])
-    mrows = {i: float(msum[i] / n_total) for i in range(D)}
+    # an empty corpus (or an all-null dim) sums to zero: divide by 1, not 0
+    mrows = {i: float(msum[i] / max(csum[i], 1)) for i in range(D)}
+    n_div = max(n_total, 1)
     C = [
-        [float(S[i][j] / n_total) - mrows[i] * mrows[j] for j in range(D)]
+        [float(S[i][j] / n_div) - mrows[i] * mrows[j] for j in range(D)]
         for i in range(D)
     ]
     import math
@@ -857,6 +875,8 @@ def pca_top_component(
                 acc += C[i][j] * v[j]
             w[i] = acc
         norm = math.sqrt(sum(wi * wi for wi in w))
+        if norm == 0.0:  # zero covariance: every direction is a fixed point
+            break
         v = [wi / norm for wi in w]
     mx = max(range(dim), key=lambda i: (abs(v[i]), -i))
     if v[mx] < 0:
@@ -864,7 +884,7 @@ def pca_top_component(
     w = [sum(C[i][j] * v[j] for j in range(dim)) for i in range(dim)]
     lam = sum(v[i] * w[i] for i in range(dim))
     trace = sum(C[i][i] for i in range(dim))
-    var_explained = round(lam / trace, 6)
+    var_explained = round(lam / trace, 6) if trace else 0.0
     spark = vectors.sparkSession
     rows = [
         (i, round(mrows[i], 6), round(v[i], 6), var_explained)

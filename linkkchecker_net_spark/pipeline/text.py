@@ -218,7 +218,6 @@ def winnow_fingerprints(
 
     Returns distinct (doc_id, fp) rows, fp = bigint gram hash.
     """
-    from .dedup import shingles as _  # noqa: F401  (same family)
     from ._parallel import spread_scan
 
     # per-doc cost is O(tokens x window) interpreted-HOF md5 work — spread

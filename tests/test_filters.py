@@ -10,8 +10,6 @@ from linkkchecker_net_spark.engine.filters import (
     CuckooFilter,
     ShardedBloom,
     build_bloom,
-    build_partitioned_filters,
-    load_partitioned_filters,
 )
 
 
@@ -81,7 +79,7 @@ def test_sharded_bloom_semantics():
 
 
 @pytest.mark.usefixtures("spark")
-def test_spark_builders(spark, tmp_path):
+def test_spark_builders(spark):
     import pandas as pd
 
     pdf = pd.DataFrame({"url_hash": _keys(20_000)})
@@ -90,9 +88,6 @@ def test_spark_builders(spark, tmp_path):
     blob = build_bloom(df, capacity_hint=20_000)
     bf = ShardedBloom.from_bytes(blob)
     assert bf.contains(pdf["url_hash"].to_numpy()).all()
-
-    meta = build_partitioned_filters(df, str(tmp_path / "filters"), partitions=4)
-    _check_partitioned(meta, tmp_path, pdf)
 
 
 def test_bloom_build_driver_traffic_is_O_m(spark):
@@ -153,17 +148,6 @@ def test_bloom_build_driver_traffic_is_O_m(spark):
         "build is shipping per-task full partials again"
     )
     assert sb.contains(pdf["url_hash"].to_numpy()).all()
-
-
-def _check_partitioned(meta, tmp_path, pdf):
-    assert set(meta) == {0, 1, 2, 3}
-    filters = load_partitioned_filters(str(tmp_path / "filters"))
-    keys = pdf["url_hash"].to_numpy()
-    parts = np.mod(keys, 4)  # pmod semantics for negatives
-    parts = np.where(parts < 0, parts + 4, parts)
-    for p in range(4):
-        sub = keys[parts == p]
-        assert filters[p].contains(sub).all()
 
 
 def test_bloom_udf_uses_broadcast(spark):

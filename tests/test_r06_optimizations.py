@@ -15,8 +15,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
-
 
 @pytest.fixture(scope="module")
 def spark():

@@ -1,15 +1,11 @@
 """Equivalence tests for the at-scale code paths (SURVEY.md §7 M5):
-salted politeness, bloom-layered anti-join, cuckoo snapshots, blocked
-cosine — every scale path must produce byte-identical results to the
-simple path."""
+salted politeness, bloom-layered anti-join, blocked cosine — every scale
+path must produce byte-identical results to the simple path."""
 
 from __future__ import annotations
 
-import os
-
 from linkkchecker_net_spark.engine import catalog, tables
 from linkkchecker_net_spark.engine.driver import CrawlConfig, CrawlDriver
-from linkkchecker_net_spark.engine.filters import load_partitioned_filters
 
 
 def _run(spark, fx, ckpt, **cfg):
@@ -42,32 +38,6 @@ def test_bloom_layered_antijoin_equivalence(spark, golden_fixtures, tmp_path):
         spark, fx, tmp_path / "wb", broadcast_seen_threshold=0, use_bloom=True
     )
     assert _rows(plain) == _rows(bloomed)
-
-
-def test_cuckoo_snapshots_written_and_complete(spark, golden_fixtures, tmp_path):
-    """North-rule lineage artifact: per-partition cuckoo snapshots at every
-    epoch contain exactly the seen set so far."""
-    fx = golden_fixtures
-    d = _run(
-        spark, fx, tmp_path / "cf", snapshot_filters=True, filter_partitions=4
-    )
-    ck = str(tmp_path / "cf")
-    last = catalog.list_complete_epochs(ck)[-1]
-    filters = load_partitioned_filters(
-        os.path.join(catalog.epoch_dir(ck, last), "filters")
-    )
-    assert filters
-    import numpy as np
-
-    seen = [
-        (r["url_hash"]) for r in d.seen().select("url_hash").collect()
-    ]
-    keys = np.array(seen, dtype=np.int64)
-    parts = np.mod(keys, 4)
-    parts = np.where(parts < 0, parts + 4, parts)
-    for p, cf in filters.items():
-        sub = keys[parts == p]
-        assert cf.contains(sub).all(), f"partition {p} missing seen keys"
 
 
 def test_blocked_cosine_equals_bruteforce(spark):
@@ -136,50 +106,16 @@ def test_crawl_log(spark, golden_spark_crawl, golden_oracle_crawl):
     assert f"for {some['url']}" in msg
 
 
-def test_bucketed_seen_equivalence_and_plan(spark, golden_fixtures, tmp_path):
-    """SURVEY §4 storage-partitioned anti-join: the bucketed-seen crawl is
-    byte-identical to the plain path, and the >threshold anti-join plan has
-    NO exchange on the seen side (the bucketed scan arrives partitioned)."""
-    fx = golden_fixtures
-    plain = _run(spark, fx, tmp_path / "pl", broadcast_seen_threshold=0)
-    bucketed = _run(
-        spark,
-        fx,
-        tmp_path / "bk",
-        broadcast_seen_threshold=0,
-        bucketed_seen=True,
-        seen_buckets=8,
-    )
-    assert _rows(plain) == _rows(bucketed)
-
-    # plan shape: candidates anti-join bucketed seen — only ONE exchange
-    # (the candidate side), and the seen side is a bucketed scan
-    from pyspark.sql import functions as F
-
-    tbl = bucketed._seen_table()
-    seen = spark.table(tbl).select("url_hash", "url")
-    cand = spark.range(0, 1000).select(
-        F.xxhash64("id").alias("url_hash"),
-        F.concat(F.lit("u"), F.col("id")).alias("url"),
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        anti = cand.join(seen, on=["url_hash", "url"], how="left_anti")
-        plan = anti._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    assert plan.count("Exchange") == 1, plan
-    assert "Bucketed: true" in plan, plan
-
-
-def test_shuffle_join_paths_equivalence(spark, golden_fixtures, tmp_path):
+def test_shuffle_join_paths_equivalence(
+    spark, golden_fixtures, golden_spark_crawl, tmp_path
+):
     """The >threshold physical strategies — shuffle fetch join (plain left
     join instead of broadcast-inner + anti recovery), shuffle body join,
     shuffle parent join, parallel W2 rank — must be row-identical to the
     all-broadcast small-crawl plan.  This is the plan the saturated
     steady-state bench (and a 10^10-frontier epoch) actually runs."""
     fx = golden_fixtures
-    plain = _run(spark, fx, tmp_path / "bc")
+    plain = golden_spark_crawl
     shuffled = _run(
         spark,
         fx,
@@ -189,41 +125,6 @@ def test_shuffle_join_paths_equivalence(spark, golden_fixtures, tmp_path):
         parallel_rank_threshold=0,
     )
     assert _rows(plain) == _rows(shuffled)
-
-
-def test_bucketed_frontier_equivalence_and_plan(spark, golden_fixtures, tmp_path):
-    """North-star frontier-table fidelity: with bucketed_frontier the
-    politeness window (W1) reads the frontier pre-partitioned by host —
-    crawl results byte-identical to the plain path, and the window plan has
-    NO shuffle exchange on the frontier side (only the robots broadcast)."""
-    fx = dict(golden_fixtures)
-    fx["robots"] = [dict(r, budget=4) for r in golden_fixtures["robots"]]
-    plain = _run(spark, fx, tmp_path / "pf", default_budget=5)
-    bucketed = _run(
-        spark,
-        fx,
-        tmp_path / "bf",
-        default_budget=5,
-        bucketed_frontier=True,
-        frontier_buckets=8,
-    )
-    assert _rows(plain) == _rows(bucketed)
-
-    # plan shape: W1 over the (still-present) last bucketed frontier table
-    from linkkchecker_net_spark.engine.epoch import split_politeness
-
-    last = max(
-        int(t.name.rsplit("_e", 1)[1])
-        for t in spark.catalog.listTables()
-        if t.name.startswith("frontier_bk_")
-    )
-    frontier = spark.table(bucketed._frontier_table(last - 1))
-    robots = tables.robots_df(spark, fx["robots"])
-    batch, carry = split_politeness(frontier, robots, default_budget=5)
-    plan = batch._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "Bucketed: true" in plan, plan
 
 
 def test_budget_sentinel_always_enforced(spark, golden_fixtures, tmp_path):
@@ -288,7 +189,7 @@ def test_pace_fetch_epoch(spark, golden_fixtures, tmp_path):
     state = d.run_one_epoch(d._read_state())
     res = epoch_mod.run_epoch(
         spark,
-        frontier=d._read_frontier(state),
+        frontier=catalog.read_table(spark, state["frontier_path"]),
         seen=spark.read.parquet(*d._seen_paths(state, 0)),
         web=web,
         robots=robots,
@@ -312,28 +213,22 @@ def test_pace_fetch_epoch(spark, golden_fixtures, tmp_path):
         df.unpersist()
 
 
-def test_bucketed_seen_compaction(spark, golden_fixtures, tmp_path):
-    """VERDICT r2 item 6: the bucketed seen table is rewritten from the
-    compacted snapshot on the seen_compact_every cadence, so its file
-    fan-in stays O(buckets) instead of growing as buckets x epochs."""
-    import glob
+def test_seen_compaction_equivalence(
+    spark, golden_fixtures, golden_spark_crawl, tmp_path
+):
+    """Seen compaction (one seen_full/ snapshot once more than
+    seen_compact_every delta dirs accumulate) only bounds the anti-join
+    read fan-in: results are row-identical to the uncompacted crawl."""
+    import os
 
-    fx = dict(golden_fixtures)
-    fx["robots"] = []
-    kw = dict(default_budget=6, max_epochs=7, broadcast_seen_threshold=0)
-    plain = _run(spark, fx, tmp_path / "pc", **kw)
-    buck = _run(
-        spark, fx, tmp_path / "bc",
-        bucketed_seen=True, seen_buckets=4, seen_compact_every=2, **kw,
-    )
-    assert _rows(plain) == _rows(buck)
-    epochs = catalog.list_complete_epochs(str(tmp_path / "bc"))
-    assert len(epochs) > 2 * 2, "crawl too short to exercise compaction"
-    files = glob.glob(str(tmp_path / "bc" / "seen_bucketed" / "*"))
-    files = [f for f in files if not f.endswith("_SUCCESS")]
-    # bound: one rewrite (<= buckets files) + at most seen_compact_every
-    # uncompacted epoch appends on top
-    assert len(files) <= 4 * (2 + 2), (len(files), sorted(files))
+    compacted = _run(spark, golden_fixtures, tmp_path / "cc", seen_compact_every=2)
+    assert _rows(golden_spark_crawl) == _rows(compacted)
+    ck = str(tmp_path / "cc")
+    snapshots = [
+        e for e in catalog.list_complete_epochs(ck)
+        if os.path.isdir(os.path.join(catalog.epoch_dir(ck, e), "seen_full"))
+    ]
+    assert len(snapshots) >= 2, snapshots
 
 
 def test_dedup_clusters_components(spark):
@@ -396,12 +291,14 @@ def test_dedup_clusters_star_escalation(spark):
     assert stats["star_rounds"] <= 2 * int(math.log2(n)), stats
 
 
-def test_truncate_plans_equivalence(spark, golden_fixtures, tmp_path):
+def test_truncate_plans_equivalence(
+    spark, golden_fixtures, golden_spark_crawl, tmp_path
+):
     """truncate_plans (eager localCheckpoint in place of persist) must be
     a pure plan-depth optimization: crawl results byte-identical to the
     default persist path."""
     fx = golden_fixtures
-    plain = _run(spark, fx, tmp_path / "tp0")
+    plain = golden_spark_crawl
     truncated = _run(spark, fx, tmp_path / "tp1", truncate_plans=True)
     assert _rows(plain) == _rows(truncated)
 
@@ -802,6 +699,54 @@ def test_pca_top_component_negative_entry_kept(spark):
     out = {r["dim"]: r for r in pca_top_component(df).collect()}
     assert out[0]["pc1"] == -0.447214 and out[1]["pc1"] == 0.894427
     assert out[0]["var_explained"] == 1.0
+
+
+def test_pca_top_component_empty_corpus_is_zero(spark):
+    """An empty corpus has zero moments, not 0/0: mean 0, pc1 stays the
+    start vector, var_explained 0 — no NaN row."""
+    from linkkchecker_net_spark.pipeline.similarity import pca_top_component
+
+    df = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = {r["dim"]: r for r in pca_top_component(df, dim=2).collect()}
+    assert out[0]["mean"] == 0.0 and out[1]["mean"] == 0.0
+    assert out[0]["pc1"] == 0.707107 and out[1]["pc1"] == 0.707107
+    assert out[0]["var_explained"] == 0.0
+
+
+def test_pca_top_component_ragged_vectors_raise(spark):
+    """Rows of length 2, 1 and 3 hold 3·2 values in total: a reshape would
+    silently misalign them, so the kernel must raise instead."""
+    import pytest
+
+    from linkkchecker_net_spark.pipeline.similarity import pca_top_component
+
+    rows = [(0, [1.0, 2.0]), (1, [3.0]), (2, [4.0, 5.0, 6.0])]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ragged vectors"):
+        pca_top_component(df, dim=2).collect()
+
+
+def test_pca_top_component_skips_null_elements(spark):
+    """A null element is skipped, as SQL avg/sum skip it: the dim-0 mean
+    is over its three non-null values, and no NaN reaches the output."""
+    import math
+
+    from linkkchecker_net_spark.pipeline.similarity import pca_top_component
+
+    rows = [
+        (0, [3.0, 4.0]),
+        (1, [6.0, 8.0]),
+        (2, [None, 4.0]),
+        (3, [-3.0, -4.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    out = {r["dim"]: r for r in pca_top_component(df, dim=2).collect()}
+    assert out[0]["mean"] == 2.0 and out[1]["mean"] == 3.0
+    vals = [out[d][c] for d in (0, 1) for c in ("pc1", "var_explained")]
+    assert all(math.isfinite(v) for v in vals), vals
+    assert abs(out[0]["pc1"] ** 2 + out[1]["pc1"] ** 2 - 1.0) < 1e-5
 
 
 def test_ann_recall_report_floors_and_shape(spark):

@@ -68,14 +68,11 @@ def main(argv: list[str] | None = None) -> int:
     # must canonicalize to a URL; errors print and exit without crawling
     import re
 
-    from linkkchecker_net_spark.kernels.canonicalize import canonicalize, host_of
+    from linkkchecker_net_spark.kernels.canonicalize import host_of, normalize_seed
 
     errors = []
     for s in args.seeds:
-        raw = s.strip()
-        if raw and not raw.lower().startswith("http"):
-            raw = "http://" + raw
-        url = canonicalize(None, raw)
+        url = normalize_seed(s)
         host = host_of(url) if url else None
         # .NET's `new Uri(...)` rejects hosts with spaces/empties outright
         # (EngineConfig.cs:58-70); urljoin is permissive, so check here

@@ -23,10 +23,10 @@ from linkkchecker_net_spark import schemas
 from linkkchecker_net_spark.engine import catalog, epoch as epoch_mod
 from linkkchecker_net_spark.engine.filters import build_bloom
 from linkkchecker_net_spark.kernels.canonicalize import (
-    authority_of,
-    base_prefix_of,
-    canonicalize,
-    host_of,
+    authority_udf,
+    base_prefix_udf,
+    host_udf,
+    normalize_seed_udf,
 )
 
 
@@ -164,96 +164,44 @@ class CrawlDriver:
 
     # ------------------------------------------------------------------ init
     def init_seeds(self, seeds: list[dict]) -> dict:
-        """Epoch-0 frontier from the seed list — driver-side Python (tiny),
-        mirroring EngineConfig.cs:58-70 scheme defaulting + claim-at-init."""
-        rows, seen_urls, seed_auths, seed_prefixes = [], set(), [], []
-        rank = 0
-        for s in seeds:
-            raw = (s.get("seed_url") or "").strip()
-            if raw and not raw.lower().startswith("http"):
-                raw = "http://" + raw
-            url = canonicalize(None, raw)
-            if url is None or url in seen_urls:
-                continue
-            seen_urls.add(url)
-            host = host_of(url) or ""
-            auth = authority_of(url)
-            if auth is not None and auth not in seed_auths:
-                seed_auths.append(auth)
-            pref = base_prefix_of(url)
-            if pref is not None and pref not in seed_prefixes:
-                seed_prefixes.append(pref)
-            rows.append(
-                (url, 0, host, 0, int(s.get("priority", 0)), 0, None, url, True, True, rank)
-            )
-            rank += 1
-
-        # Arrow-path createDataFrame: a list-of-Rows createDataFrame pickles
-        # every row through the JVM row decoder (~8 task-seconds for 20k
-        # seeds); one pandas block converts in ~0.1s
+        """Epoch-0 init from a seed list: list position is the
+        first-occurrence order and a missing priority is 0; the list
+        becomes a seed DataFrame for :meth:`init_seeds_df`."""
         import pandas as pd
 
-        names = [f.name for f in schemas.FRONTIER.fields]
-        pdf = pd.DataFrame(
-            dict(zip(names, zip(*rows)))
-            if rows
-            # dtype=object: pandas 2.x types empty columns float64,
-            # which Arrow cannot cast to the string/bool schema
-            else {n: pd.Series([], dtype=object) for n in names}
+        # a pandas frame converts through Arrow in one block, where a list
+        # of rows is pickled row by row (~8 task-seconds for 20k seeds);
+        # explicit dtypes because pandas 2.x types empty columns float64,
+        # which Arrow cannot cast to the string/int schema
+        pdf = pd.DataFrame({
+            "idx": pd.Series(range(len(seeds)), dtype="int64"),
+            "seed_url": pd.Series([s.get("seed_url") for s in seeds], dtype=object),
+            "priority": pd.Series([int(s.get("priority", 0)) for s in seeds], dtype="int32"),
+        })
+        return self.init_seeds_df(
+            self.spark.createDataFrame(pdf, "idx long, seed_url string, priority int")
         )
-        frontier = (
-            self.spark.createDataFrame(pdf, schema=schemas.FRONTIER)
-            .withColumn("url_hash", F.xxhash64("url"))
-            .withColumn("host_hash", F.xxhash64("host"))
-        )
-        d = catalog.init_dir(self.cfg.ckpt_dir)
-        os.makedirs(d, exist_ok=True)
-        catalog.write_table(frontier, os.path.join(d, "frontier"))
-        init_delta = frontier.select(
-            "url_hash", "url", F.col("crawl_depth").alias("first_depth"),
-            F.lit(-1).alias("epoch"),
-        )
-        catalog.write_table(init_delta, os.path.join(d, "seen_delta"))
-        manifest = {
-            "next_rank": rank,
-            "frontier_count": len(rows),
-            "seed_authorities": seed_auths,
-            "seed_prefixes": seed_prefixes,
-            "next_epoch": 0,
-        }
-        catalog.write_manifest(d, manifest)
-        return manifest
 
     def init_seeds_df(self, seeds_df: DataFrame) -> dict:
-        """Distributed epoch-0 init — the 10^10-seed path.
+        """Epoch-0 init: writes the init frontier, seen delta and manifest.
 
         `seeds_df` columns: idx (long, defines first-occurrence order),
-        seed_url (string), priority (int).  Same semantics as
-        :meth:`init_seeds` (scheme defaulting, canonicalization,
-        keep-first dedup, dense ranks in input order) but every step is a
-        DataFrame op, so a seed list far beyond driver memory still
-        initializes; the driver-side list path above is kept for
-        interactive/small runs.
+        seed_url (string), priority (int).  Each seed goes through
+        `normalize_seed` (EngineConfig.cs:58-70 scheme defaulting +
+        canonicalization); the first occurrence of each URL is kept, with
+        its priority, and seeds are claimed at init with dense ranks in
+        input order.  Every step is a DataFrame op, so a seed list far
+        beyond driver memory still initializes.
 
         Ranks come from epoch._global_rank (parallel range-partition sort +
         per-partition offsets) — a 10^10-seed list never funnels through a
         single-partition window.
         """
-        from linkkchecker_net_spark.kernels.canonicalize import (
-            canonicalize_udf,
-            host_udf,
-        )
-
-        raw = F.trim(F.col("seed_url"))
-        fixed = F.when(
-            F.lower(raw).startswith("http") | (raw == ""), raw
-        ).otherwise(F.concat(F.lit("http://"), raw))
-        canon = (
-            seeds_df.select("idx", F.col("priority").cast("int").alias("priority"), fixed.alias("raw"))
-            .filter(F.col("raw") != "")
-            .withColumn("url", canonicalize_udf(F.lit(None), F.col("raw")))
-            .filter(F.col("url").isNotNull())
-        )
+        canon = seeds_df.select(
+            "idx",
+            F.col("priority").cast("int").alias("priority"),
+            normalize_seed_udf("seed_url").alias("url"),
+        ).filter(F.col("url").isNotNull())
         first = canon.groupBy("url").agg(
             F.min("idx").alias("idx"),
             F.min_by("priority", "idx").alias("priority"),
@@ -291,11 +239,6 @@ class CrawlDriver:
         )
         catalog.write_table(init_delta, os.path.join(d, "seen_delta"))
         n = int(obs.get["n"])
-        from linkkchecker_net_spark.kernels.canonicalize import (
-            authority_udf,
-            base_prefix_udf,
-        )
-
         # one job for both seed-config dimensions (authority set + base
         # prefixes), partial-aggregated map-side — not two full re-scans
         pairs = (

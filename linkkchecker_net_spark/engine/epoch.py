@@ -244,7 +244,7 @@ def generate_candidates(
     seed_prefixes: list[str],
     epoch: int,
     broadcast_parseable: bool = True,
-    pin=None,
+    pin=DataFrame.persist,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """P8/P9/P10 + P1 in ONE fused Arrow pass (kernels/fused.py) →
     (candidates, page_meta, persisted handle).
@@ -306,7 +306,7 @@ def generate_candidates(
         fused.extract_batches(set(seed_authorities), tuple(sorted(set(seed_prefixes)))),
         fused.FUSED_SCHEMA,
     )
-    extracted = pin(extracted) if pin is not None else extracted.persist()
+    extracted = pin(extracted)
 
     # page-level extractions for in-site pages (CanonicalChecker /
     # DescriptionLengthChecker are F2-gated: CanonicalChecker.cs:34-36)
@@ -343,7 +343,7 @@ def dedup_gate_rank(
     bloom_gap: DataFrame | None = None,
     small_rank: bool = False,
     broadcast_batch: bool = True,
-    pin=None,
+    pin=DataFrame.persist,
     rank_lo: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """F10 gate → W3 dedup → J1 anti-join → W2 rank over candidates that
@@ -515,7 +515,7 @@ def dedup_gate_rank(
         # next_rank) — both free from the epoch manifests — so the rank
         # uses the sampling-free bucketed strategy: ONE flat job per epoch
         # (counts+cache), not two (sampling, then counts)
-        pre_rank = pin(cand) if pin is not None else cand.persist()
+        pre_rank = pin(cand)
         cand, rank_source = _global_rank(
             pre_rank, next_rank, bucket_bounds=(rank_lo, next_rank)
         )
@@ -529,7 +529,7 @@ def dedup_gate_rank(
     # the candidate pipeline (parse → canonicalize → windows → anti-join)
     # feeds three consumers (gated results, seen delta, new frontier) —
     # persist so it executes once per epoch
-    cand = pin(cand) if pin is not None else cand.persist()
+    cand = pin(cand)
 
     new_results = cand.filter(~F.col("supported") | F.col("robots_blocked")).select(
         "url",
@@ -743,14 +743,14 @@ def run_epoch(
     if truncate_plans:
         pin = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
     else:
-        pin = None
+        pin = DataFrame.persist
     # The batch (politeness-bounded, body-free) feeds the fetch join, the
     # seen delta, and the dead-link anti-join — persist the SMALL side.
     # Skipped when W1 was the identity: the batch is then a bare frontier
     # scan, and re-reading a coalesced parquet is cheaper than one more
     # eager materialization job per epoch.
     if batch_needs_pin:
-        batch = pin(batch) if pin is not None else batch.persist()
+        batch = pin(batch)
     # fetched is BODY-FREE (status/header columns only — bodies are joined
     # in by the parse stage, see generate_candidates), so persisting it is
     # a batch-sized cache write, not a page-payload copy.  It feeds the
@@ -766,7 +766,7 @@ def run_epoch(
         from linkkchecker_net_spark.engine.paced_fetch import paced_fetch
 
         fetched = paced_fetch(fetched, crawl_delays or {}, default_delay=0.0)
-    fetched = pin(fetched) if pin is not None else fetched.persist()
+    fetched = pin(fetched)
 
     seen_delta = batch.select(
         "url_hash",

@@ -132,6 +132,17 @@ def canonicalize(base_url: str | None, href: str | None) -> str | None:
     return _normalize(url)
 
 
+def normalize_seed(seed: str | None) -> str | None:
+    """A seed-list entry as a canonical URL (EngineConfig.cs:58-70): trim
+    every whitespace kind, default the scheme to http:// when the seed
+    does not start with "http", then canonicalize.  None when the seed
+    cannot form a URL."""
+    seed = (seed or "").strip()
+    if seed and not seed.lower().startswith("http"):
+        seed = "http://" + seed
+    return canonicalize(None, seed)
+
+
 def host_of(url: str | None) -> str | None:
     """P2 — authority host (Engine.cs:76 GetLeftPart(Authority) host part)."""
     if not url:
@@ -207,6 +218,11 @@ def canonicalize_udf(base: pd.Series, href: pd.Series) -> pd.Series:
     return pd.Series(
         [canonicalize(b, h) for b, h in zip(base, href)], dtype="object"
     )
+
+
+@F.pandas_udf(T.StringType())
+def normalize_seed_udf(seed: pd.Series) -> pd.Series:
+    return pd.Series([normalize_seed(s) for s in seed], dtype="object")
 
 
 @F.pandas_udf(T.StringType())

@@ -28,13 +28,9 @@ def spread_scan(df: DataFrame, target: "int | None" = None) -> DataFrame:
     """Repartition `df` to `target` (default: the session default
     parallelism) iff its planned partition count is lower; no-op (and no
     exchange) otherwise."""
-    try:
-        sc = df.sparkSession.sparkContext
-        if target is None:
-            target = sc.defaultParallelism
-        current = df.rdd.getNumPartitions()
-    except Exception:
-        return df
+    if target is None:
+        target = df.sparkSession.sparkContext.defaultParallelism
+    current = df.rdd.getNumPartitions()
     if current >= target or target <= 1:
         return df
     return df.repartition(target)

@@ -140,7 +140,6 @@ def hits(
     src_col: str = "src",
     dst_col: str = "dst",
     iterations: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """HITS (Kleinberg 1999) hubs & authorities, L1-normalized per
     half-step — the complement to PageRank for seed discovery: a good
@@ -175,50 +174,50 @@ def hits(
     # graph at 2 iterations; 1.5 s persisted).  The tables are N rows ×
     # 16 bytes — rank-table-sized, never edge-sized.
     half_steps = []
-    for _ in range(iterations):
-        ar = (
-            es.join(
-                h.select(F.col("id").alias("src"), F.col("h").alias("hv")),
-                "src",
+    try:
+        for _ in range(iterations):
+            ar = (
+                es.join(
+                    h.select(F.col("id").alias("src"), F.col("h").alias("hv")),
+                    "src",
+                )
+                .groupBy("dst")
+                .agg(F.sum("hv").alias("v"))
+                .persist()
             )
-            .groupBy("dst")
-            .agg(F.sum("hv").alias("v"))
-            .persist()
-        )
-        half_steps.append(ar)
-        a = ar.crossJoin(F.broadcast(ar.agg(F.sum("v").alias("s")))).select(
-            F.col("dst").alias("id"), (F.col("v") / F.col("s")).alias("a")
-        )
-        hr = (
-            ed.join(
-                a.select(F.col("id").alias("dst"), F.col("a").alias("av")),
-                "dst",
+            half_steps.append(ar)
+            a = ar.crossJoin(F.broadcast(ar.agg(F.sum("v").alias("s")))).select(
+                F.col("dst").alias("id"), (F.col("v") / F.col("s")).alias("a")
             )
-            .groupBy("src")
-            .agg(F.sum("av").alias("v"))
-            .persist()
+            hr = (
+                ed.join(
+                    a.select(F.col("id").alias("dst"), F.col("a").alias("av")),
+                    "dst",
+                )
+                .groupBy("src")
+                .agg(F.sum("av").alias("v"))
+                .persist()
+            )
+            half_steps.append(hr)
+            h = hr.crossJoin(F.broadcast(hr.agg(F.sum("v").alias("s")))).select(
+                F.col("src").alias("id"), (F.col("v") / F.col("s")).alias("h")
+            )
+        out = (
+            nodes.select(F.col(node_col).alias("id"))
+            .join(h, "id", "left")
+            .join(a, "id", "left")
+            .select(
+                F.col("id").alias(node_col),
+                F.coalesce("h", F.lit(0.0)).alias("hub"),
+                F.coalesce("a", F.lit(0.0)).alias("authority"),
+            )
         )
-        half_steps.append(hr)
-        h = hr.crossJoin(F.broadcast(hr.agg(F.sum("v").alias("s")))).select(
-            F.col("src").alias("id"), (F.col("v") / F.col("s")).alias("h")
-        )
-    out = (
-        nodes.select(F.col(node_col).alias("id"))
-        .join(h, "id", "left")
-        .join(a, "id", "left")
-        .select(
-            F.col("id").alias(node_col),
-            F.coalesce("h", F.lit(0.0)).alias("hub"),
-            F.coalesce("a", F.lit(0.0)).alias("authority"),
-        )
-    )
-    if materialize:
-        out = out.localCheckpoint()
+        return out.localCheckpoint()
+    finally:
         es.unpersist()
         ed.unpersist()
         for df in half_steps:
             df.unpersist()
-    return out
 
 
 def priority_from_rank(

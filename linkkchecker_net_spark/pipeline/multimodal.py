@@ -2288,9 +2288,10 @@ def mirror_phash_pairs(corpus: DataFrame) -> DataFrame:
     re-uploads of the same orientation.
 
     Scale: one mapInPandas decode pass emitting two 64-bit hashes
-    (bytes die at the stage boundary), then an exact-equality self-join
-    on the canonical hash — an inverted-index join on a 64-bit key,
-    never all-pairs; undecodable rows drop out before the join.
+    (bytes die at the stage boundary), then a group-by on the canonical
+    hash with pairs formed only inside each group — an inverted index on
+    a 64-bit key, never all-pairs; undecodable rows drop out before the
+    group-by.
     """
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2309,32 +2310,24 @@ def mirror_phash_pairs(corpus: DataFrame) -> DataFrame:
             if out["image_id"]:
                 yield pd.DataFrame(out)
 
-    # persist the (id, ph, mph, canon) proxy table: both sides of the
-    # self-join read it, and without the persist each side re-runs the
-    # full decode+hash pass (the mapInPandas stage is opaque to exchange
-    # reuse) — measured 2x the decode cost on the flip-dedup corpus.
-    # 32 bytes/row at any corpus size; the image bytes die at this
-    # stage boundary exactly as before.
-    hashed = corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        scan, "image_id string, ph long, mph long"
-    ).withColumn("canon", F.least("ph", "mph")).persist()
-    a = hashed.select(
-        F.col("image_id").alias("img_a"),
-        F.col("ph").alias("ph_a"),
-        "canon",
-    )
-    b = hashed.select(
-        F.col("image_id").alias("img_b"),
-        F.col("ph").alias("ph_b"),
-        "canon",
+    # one read of the decode+hash pass: group on the canonical hash and
+    # pair within each group, so no self-join re-reads (or caches) the
+    # opaque mapInPandas stage
+    groups = (
+        corpus.select("image_id", "bytes", "fmt")
+        .mapInPandas(scan, "image_id string, ph long, mph long")
+        .groupBy(F.least("ph", "mph").alias("canon"))
+        .agg(F.collect_list(F.struct("image_id", "ph")).alias("m"))
+        .filter(F.size("m") > 1)
     )
     return (
-        a.join(b, "canon")
-        .filter(F.col("img_a") < F.col("img_b"))
+        groups.select(F.explode("m").alias("a"), "m")
+        .select("a", F.explode("m").alias("b"))
+        .filter(F.col("a.image_id") < F.col("b.image_id"))
         .select(
-            "img_a",
-            "img_b",
-            (F.col("ph_a") != F.col("ph_b")).alias("mirrored"),
+            F.col("a.image_id").alias("img_a"),
+            F.col("b.image_id").alias("img_b"),
+            (F.col("a.ph") != F.col("b.ph")).alias("mirrored"),
         )
         .dropDuplicates()
     )

@@ -12,6 +12,25 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def new_cached_rdds(spark):
+    """Callable listing the RDDs cached since the test began.  A local
+    checkpoint (a function's materialized output) is not a cached
+    relation and is not listed."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    def listed():
+        m = jsc.getPersistentRDDs()
+        return [
+            m[k].rdd().toString()
+            for k in m.keySet()
+            if k not in before and not m[k].rdd().isCheckpointed()
+        ]
+
+    return listed
+
+
 @pytest.fixture(scope="session")
 def golden_fixtures():
     from linkkchecker_net_spark.fixtures import webgen

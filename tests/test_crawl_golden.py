@@ -7,9 +7,11 @@ Asserts the north-rule correctness gate: same seed list + politeness budget
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from linkkchecker_net_spark.engine import tables
+from linkkchecker_net_spark.engine import catalog, tables
 from linkkchecker_net_spark.engine.driver import CrawlConfig, CrawlDriver
 from linkkchecker_net_spark.oracle import bfs
 
@@ -205,3 +207,66 @@ def test_wildcard_robots_engine_equals_oracle(spark, tmp_path):
         "http://w.test/a/1/c", "http://w.test/data/f.json",
         "http://w.test/tmp9", "http://w.test/old/y",
     }
+
+
+# whitespace kinds Spark's `trim` leaves (tab, newline, U+00A0), a
+# scheme-less seed, an upper-case scheme+host, a later duplicate with a
+# different priority, empty/None seeds and an entry with no priority key
+ADVERSARIAL_SEEDS = [
+    {"seed_url": "\thttp://a.test/x", "priority": 3},
+    {"seed_url": "b.test/y\n", "priority": 1},
+    {"seed_url": "\u00a0http://c.test/dir/\u00a0", "priority": 2},
+    {"seed_url": "d.test/page", "priority": 0},
+    {"seed_url": "HTTP://UPPER.test/", "priority": 5},
+    {"seed_url": "http://a.test/x", "priority": 9},
+    {"seed_url": "", "priority": 4},
+    {"seed_url": None, "priority": 4},
+    {"seed_url": "http://e.test:8080/dir/p"},
+]
+
+FRONTIER_COLS = ["url", "host", "priority", "crawl_depth", "discovery_rank", "seed_url"]
+
+
+@pytest.mark.parametrize(
+    "seeds",
+    [ADVERSARIAL_SEEDS, [], [{"seed_url": ""}, {"seed_url": None}, {"seed_url": " \t"}]],
+    ids=["adversarial", "empty", "all_invalid"],
+)
+@pytest.mark.parametrize("entry", ["list", "df"])
+def test_seed_init_matches_oracle(spark, golden_fixtures, tmp_path, entry, seeds):
+    """Both seed-ingest entry points give the oracle's init frontier,
+    next_rank and seed authority/prefix sets; with no valid seed, run()
+    writes no epoch."""
+    web = tables.web_df(spark, golden_fixtures["web"])
+    robots = tables.robots_df(spark, golden_fixtures["robots"])
+    driver = CrawlDriver(spark, web, robots, CrawlConfig(ckpt_dir=str(tmp_path)))
+    if entry == "list":
+        manifest = driver.init_seeds(seeds)
+    else:
+        manifest = driver.init_seeds_df(
+            spark.createDataFrame(
+                [(i, s["seed_url"], s.get("priority", 0)) for i, s in enumerate(seeds)],
+                "idx long, seed_url string, priority int",
+            )
+        )
+    oracle = bfs.OracleCrawl(web={}, robots={})
+    oracle.init_seeds(seeds)
+
+    got = [
+        tuple(r)
+        for r in spark.read.parquet(
+            os.path.join(catalog.init_dir(str(tmp_path)), "frontier")
+        )
+        .select(*FRONTIER_COLS)
+        .orderBy("discovery_rank")
+        .collect()
+    ]
+    want = [tuple(getattr(e, c) for c in FRONTIER_COLS) for e in oracle.frontier]
+    assert got == want
+    assert manifest["frontier_count"] == len(want)
+    assert manifest["next_rank"] == oracle.next_rank
+    assert set(manifest["seed_authorities"]) == oracle.seed_authorities
+    assert set(manifest["seed_prefixes"]) == oracle.seed_prefixes
+    if not want:
+        assert driver.run()["frontier_count"] == 0
+        assert catalog.list_complete_epochs(str(tmp_path)) == []

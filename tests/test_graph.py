@@ -99,10 +99,10 @@ def test_anchor_corpus_cap_keeps_count_exact(spark):
     assert out["u2"]["anchor_blob"] == "only"
 
 
-def test_hits_matches_reference_iteration(spark):
+def test_hits_matches_reference_iteration(spark, new_cached_rdds):
     """Directory page linking to 3 endorsed targets: compare hub/authority
     against a straight dict-based replication of the same L1-normalized
-    half-steps."""
+    half-steps; no cached relation outlives the call."""
     from linkkchecker_net_spark.pipeline.graph import hits
 
     ids = ["dir", "p1", "p2", "p3", "stray"]
@@ -132,6 +132,7 @@ def test_hits_matches_reference_iteration(spark):
         assert math.isclose(got[u][1], a.get(u, 0.0), rel_tol=1e-12, abs_tol=1e-15), u
     assert got["dir"][0] > got["p1"][0]  # the directory is the top hub
     assert got["stray"] == (0.0, 0.0)
+    assert new_cached_rdds() == []
 
 
 def test_trustrank_spam_cluster_scores_zero(spark):

@@ -412,10 +412,11 @@ def test_image_model_score_hand_values(spark):
     assert out["trunc"]["score"] is None and out["trunc"]["keep"] is False
 
 
-def test_mirror_phash_pairs_catches_flip_and_reupload(spark):
+def test_mirror_phash_pairs_catches_flip_and_reupload(spark, new_cached_rdds):
     """A mirrored copy pairs with its original (mirrored=true), a
     byte-identical re-upload pairs with mirrored=false, and an
-    unrelated image pairs with nothing."""
+    unrelated image pairs with nothing; no cached relation outlives the
+    call."""
     import numpy as np
 
     from linkkchecker_net_spark.pipeline.multimodal import (
@@ -450,6 +451,7 @@ def test_mirror_phash_pairs_catches_flip_and_reupload(spark):
         ("a", "dup"): False,
         ("dup", "flip"): True,
     }
+    assert new_cached_rdds() == []
 
 
 def test_tile_periodicity_arms(spark):

@@ -399,9 +399,9 @@ def q_validate_images(spark, sf_dir):
     so the verdict booleans are arithmetic and DuckDB-oracle-checkable
     while the decode/PSNR/phash computation is fully real."""
     import numpy as np
-    import pandas as pd
 
     from linkkchecker_net_spark import imaging
+    from linkkchecker_net_spark.pipeline._parallel import map_rows
     from linkkchecker_net_spark.reports import validate_images
 
     _prep(spark)
@@ -409,44 +409,23 @@ def q_validate_images(spark, sf_dir):
         F.col("doc_id").cast("long").alias("id")
     )
 
-    def gen(batches):
-        for pdf in batches:
-            corpus = {"image_id": [], "bytes": [], "fmt": [], "caption": [], "phash": []}
-            web = {"url": [], "body": [], "caption": [], "image_id": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                arr = imaging.make_image(np.random.default_rng(i), 48, 48)
-                corpus["image_id"].append(f"img_{i}")
-                corpus["bytes"].append(imaging.encode_lossy(arr))
-                corpus["fmt"].append("jpeg")
-                corpus["caption"].append(f"caption {i}")
-                corpus["phash"].append(imaging.phash64(arr))
-                served = (
-                    imaging.make_image(np.random.default_rng(i + 1), 48, 48)
-                    if i % 7 == 3
-                    else arr
-                )
-                web["url"].append(f"http://cdn.test/img/{i}.bin")
-                web["body"].append(imaging.encode_lossy(served))
-                web["caption"].append(f"caption {i}" if i % 11 != 5 else "wrong")
-                web["image_id"].append(f"img_{i}")
-            if not corpus["image_id"]:
-                continue
-            yield pd.DataFrame(
-                {
-                    "c_image_id": corpus["image_id"],
-                    "c_bytes": corpus["bytes"],
-                    "c_fmt": corpus["fmt"],
-                    "c_caption": corpus["caption"],
-                    "c_phash": corpus["phash"],
-                    "w_url": web["url"],
-                    "w_body": web["body"],
-                    "w_caption": web["caption"],
-                }
-            )
+    def row(i):
+        i = int(i)
+        arr = imaging.make_image(np.random.default_rng(i), 48, 48)
+        served = (
+            imaging.make_image(np.random.default_rng(i + 1), 48, 48)
+            if i % 7 == 3
+            else arr
+        )
+        yield (
+            f"img_{i}", imaging.encode_lossy(arr), "jpeg", f"caption {i}",
+            imaging.phash64(arr), f"http://cdn.test/img/{i}.bin",
+            imaging.encode_lossy(served),
+            f"caption {i}" if i % 11 != 5 else "wrong",
+        )
 
-    both = ids.mapInPandas(
-        gen,
+    both = map_rows(
+        ids, row,
         "c_image_id string, c_bytes binary, c_fmt string, c_caption string, "
         "c_phash long, w_url string, w_body binary, w_caption string",
     ).persist()
@@ -629,7 +608,8 @@ def q_image_meta(spark, sf_dir):
     declared at encode time — a real round-trip check of the decode path
     (decode_ok / dims_match / phash_match are all arithmetic for DuckDB,
     but Spark can only produce them by actually decoding the bytes)."""
-    from linkkchecker_net_spark.pipeline.multimodal import image_metadata, synth_corpus
+    from linkkchecker_net_spark.pipeline.multimodal import image_metadata
+    from linkkchecker_net_spark.fixtures.images import synth_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select(
@@ -667,9 +647,9 @@ def _neardup_fixture_corpus(spark, sf_dir, with_captions: bool = False):
         exactly {(i-1, i) : i % 10 == 3}; all other captions are unique.
     """
     import numpy as np
-    import pandas as pd
 
     from linkkchecker_net_spark import imaging
+    from linkkchecker_net_spark.pipeline._parallel import map_rows
 
     ids = _docs(spark, sf_dir).filter(F.col("doc_id") < 240).select(
         F.col("doc_id").cast("long").alias("id")
@@ -686,35 +666,25 @@ def _neardup_fixture_corpus(spark, sf_dir, with_captions: bool = False):
         arr += coarse[np.ix_(ys, xs)][:, :, None]
         return np.clip(arr, 0, 255).astype(np.uint8)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "fmt": []}
-            if with_captions:
-                out["caption"] = []
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                if i % 10 == 7:
-                    arr = base_image(i - 1)
-                    nrng = np.random.default_rng(77_000_003 + i)
-                    noise = nrng.integers(-1, 2, size=arr.shape)
-                    arr = np.clip(arr.astype(np.int16) + noise, 0, 255).astype(
-                        np.uint8
-                    )
-                else:
-                    arr = base_image(i)
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(imaging.encode_lossy(arr))
-                out["fmt"].append("jpeg")
-                if with_captions:
-                    cap_of = i - 1 if i % 10 == 3 else i
-                    out["caption"].append(f"a photo of subject {cap_of}")
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(i):
+        i = int(i)
+        if i % 10 == 7:
+            arr = base_image(i - 1)
+            nrng = np.random.default_rng(77_000_003 + i)
+            noise = nrng.integers(-1, 2, size=arr.shape)
+            arr = np.clip(arr.astype(np.int16) + noise, 0, 255).astype(np.uint8)
+        else:
+            arr = base_image(i)
+        out = (f"img_{i:06d}", imaging.encode_lossy(arr), "jpeg")
+        if with_captions:
+            cap_of = i - 1 if i % 10 == 3 else i
+            out += (f"a photo of subject {cap_of}",)
+        yield out
 
     schema = "image_id string, bytes binary, fmt string"
     if with_captions:
         schema += ", caption string"
-    return ids.mapInPandas(gen, schema)
+    return map_rows(ids, row, schema)
 
 
 def q_image_neardup(spark, sf_dir):
@@ -761,33 +731,26 @@ def _quality_fixture_corpus(spark, sf_dir):
     bytes; doc_id % 13 == 11 payloads are truncated to 4 bytes
     (undecodable) to exercise the decode_ok=false branch."""
     import numpy as np
-    import pandas as pd
 
     from linkkchecker_net_spark import imaging
+    from linkkchecker_net_spark.pipeline._parallel import map_rows
 
     ids = _docs(spark, sf_dir).filter(F.col("doc_id") < 300).select(
         F.col("doc_id").cast("long").alias("id")
     )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "fmt": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                w = 16 + (i * 3) % 33
-                h = 16 + (i * 5) % 33
-                fmt = ("png", "jpeg", "gif")[i % 3]
-                arr = imaging.make_image(np.random.default_rng(5_000_011 + i), w, h)
-                data = imaging.encode_image(arr, fmt)
-                if i % 13 == 11:
-                    data = data[:4]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(data)
-                out["fmt"].append(fmt)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(i):
+        i = int(i)
+        w = 16 + (i * 3) % 33
+        h = 16 + (i * 5) % 33
+        fmt = ("png", "jpeg", "gif")[i % 3]
+        arr = imaging.make_image(np.random.default_rng(5_000_011 + i), w, h)
+        data = imaging.encode_image(arr, fmt)
+        if i % 13 == 11:
+            data = data[:4]
+        yield f"img_{i:06d}", data, fmt
 
-    return ids.mapInPandas(gen, "image_id string, bytes binary, fmt string")
+    return map_rows(ids, row, "image_id string, bytes binary, fmt string")
 
 
 def q_image_quality_gate(spark, sf_dir):
@@ -847,23 +810,17 @@ def _packable_fixture_corpus(spark, sf_dir):
     (n_bytes = 600 + 137·i mod 2048) so DuckDB can oracle byte-budget
     packing; shard packing never decodes, so the payload is a filler
     blob, honestly opaque."""
-    import pandas as pd
+    from linkkchecker_net_spark.pipeline._parallel import map_rows
 
     ids = _docs(spark, sf_dir).filter(F.col("doc_id") < 400).select(
         F.col("doc_id").cast("long").alias("id")
     )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"image_id": [], "bytes": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(b"\xa5" * (600 + (i * 137) % 2048))
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(i):
+        i = int(i)
+        yield f"img_{i:06d}", b"\xa5" * (600 + (i * 137) % 2048)
 
-    return ids.mapInPandas(gen, "image_id string, bytes binary")
+    return map_rows(ids, row, "image_id string, bytes binary")
 
 
 def q_image_shard_pack(spark, sf_dir):
@@ -928,34 +885,27 @@ def _image_funnel_fixture_corpus(spark, sf_dir):
     Truncated (undecodable) payloads carry the source id in their tail so
     two truncated images never collide on the 4-byte format signature."""
     import numpy as np
-    import pandas as pd
 
     from linkkchecker_net_spark import imaging
+    from linkkchecker_net_spark.pipeline._parallel import map_rows
 
     ids = _docs(spark, sf_dir).filter(F.col("doc_id") < 300).select(
         F.col("doc_id").cast("long").alias("id")
     )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "fmt": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                src = i - 1 if i % 9 == 4 else i
-                w = 16 + (src * 3) % 33
-                h = 16 + (src * 5) % 33
-                fmt = ("png", "jpeg", "gif")[src % 3]
-                arr = imaging.make_image(np.random.default_rng(5_000_011 + src), w, h)
-                data = imaging.encode_image(arr, fmt)
-                if src % 13 == 11:
-                    data = data[:4] + src.to_bytes(4, "big")
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(data)
-                out["fmt"].append(fmt)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(i):
+        i = int(i)
+        src = i - 1 if i % 9 == 4 else i
+        w = 16 + (src * 3) % 33
+        h = 16 + (src * 5) % 33
+        fmt = ("png", "jpeg", "gif")[src % 3]
+        arr = imaging.make_image(np.random.default_rng(5_000_011 + src), w, h)
+        data = imaging.encode_image(arr, fmt)
+        if src % 13 == 11:
+            data = data[:4] + src.to_bytes(4, "big")
+        yield f"img_{i:06d}", data, fmt
 
-    return ids.mapInPandas(gen, "image_id string, bytes binary, fmt string")
+    return map_rows(ids, row, "image_id string, bytes binary, fmt string")
 
 
 def q_image_funnel(spark, sf_dir):
@@ -2390,10 +2340,8 @@ def q_image_borders(spark, sf_dir):
     makes the crop box an arithmetic function of doc_id (see
     synth_bordered_corpus); 240 images keep the decode pass bounded at
     every SF."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        detect_borders,
-        synth_bordered_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import detect_borders
+    from linkkchecker_net_spark.fixtures.images import synth_bordered_corpus
 
     _prep(spark)
     ids = (
@@ -2514,10 +2462,8 @@ def q_image_dhash(spark, sf_dir):
     precisely the (2g, 2g+1) twins with g%6 <= 3, and their hamming is
     g%6.  Margins verified offline: lossy round-trip flips zero bits
     (±14-point gradient vs ±2 pixel error), min cross-group hamming 17."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        dhash_neardup_pairs,
-        synth_gradient_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import dhash_neardup_pairs
+    from linkkchecker_net_spark.fixtures.images import synth_gradient_corpus
 
     _prep(spark)
     ids = (
@@ -2658,10 +2604,8 @@ def q_image_sharpness(spark, sf_dir):
     with s = 2^(1+i%4), Δ = 4·(1+i%7) — stripe levels sit on lossy
     bucket centers so every codec round-trips bit-exactly (verified
     offline over the full 360-image grid)."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        laplacian_sharpness,
-        synth_striped_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import laplacian_sharpness
+    from linkkchecker_net_spark.fixtures.images import synth_striped_corpus
 
     _prep(spark)
     ids = (
@@ -2763,10 +2707,8 @@ def q_meta_audit(spark, sf_dir):
     phash values themselves stay Spark-side only (they'd be fixture
     arithmetic on the oracle side, proving nothing); the FLAGS carry the
     audit (and the hamming, which the ⊕1 arm pins to exactly 1)."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        meta_consistency,
-        synth_meta_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import meta_consistency
+    from linkkchecker_net_spark.fixtures.images import synth_meta_corpus
 
     _prep(spark)
     ids = (
@@ -2787,10 +2729,8 @@ def q_inline_images(spark, sf_dir):
     must NOT extract), so the oracle computes every pix_sum — including
     the lossy codec's (v div 4)*4+2 dequantization — without touching
     bytes, while Spark must decode to know it."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        inline_images,
-        synth_inline_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import inline_images
+    from linkkchecker_net_spark.fixtures.images import synth_inline_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -2804,10 +2744,8 @@ def q_resize_images(spark, sf_dir):
     — including the lossy codec's dequantization — via two
     generate_series folds (full-res sum and per-block floor-mean sum).
     Truncated payloads (i%9==4) stay ok=false with NULL sums."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        resize_images,
-        synth_rowgrad_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import resize_images
+    from linkkchecker_net_spark.fixtures.images import synth_rowgrad_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -2827,67 +2765,56 @@ def q_feed_links(spark, sf_dir):
     from email.utils import format_datetime
 
     from linkkchecker_net_spark.kernels.feedparse import feed_items_udf
+    from linkkchecker_net_spark.pipeline._parallel import map_rows
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select("doc_id")
 
-    def gen(batches):
-        import pandas as pd
+    def row(i):
+        i = int(i)
+        e0 = 1700000000 + i * 3600
+        if i % 11 == 7:
+            body = "<rss><channel><item>"
+        elif i % 2 == 0:
+            d0 = format_datetime(datetime.fromtimestamp(e0, timezone.utc))
+            d1 = format_datetime(datetime.fromtimestamp(e0 + 1800, timezone.utc))
+            body = (
+                f'<rss version="2.0"><channel><title>c{i}</title>'
+                f"<item><title>item {i} 0</title>"
+                f"<link> http://feed.test/r{i}/a </link>"
+                f"<pubDate>{d0}</pubDate></item>"
+                f"<item><title>item {i} 1</title>"
+                f"<link>http://feed.test/r{i}/b</link>"
+                f"<pubDate>{d1}</pubDate></item>"
+                f"<item><title>no link {i}</title></item>"
+                "</channel></rss>"
+            )
+        else:
+            u0 = (
+                datetime.fromtimestamp(e0, timezone.utc)
+                .isoformat()
+                .replace("+00:00", "Z")
+            )
+            u1 = (
+                datetime.fromtimestamp(e0 + 1800, timezone.utc)
+                .isoformat()
+                .replace("+00:00", "Z")
+            )
+            body = (
+                f'<feed xmlns="http://www.w3.org/2005/Atom">'
+                f"<entry><title>entry {i} 0</title>"
+                f"<updated>{u0}</updated>"
+                f'<link href="http://feed.test/a{i}/0"/>'
+                f'<link rel="enclosure" '
+                f'href="http://feed.test/img/{i}.jpg"/></entry>'
+                f"<entry><title>entry {i} 1</title>"
+                f"<updated>{u1}</updated>"
+                f'<link rel="alternate" '
+                f'href="http://feed.test/a{i}/1"/></entry></feed>'
+            )
+        yield f"http://feed.test/{i}/feed.xml", body
 
-        for pdf in batches:
-            urls, bodies = [], []
-            for i in pdf["doc_id"].astype(int):
-                i = int(i)
-                e0 = 1700000000 + i * 3600
-                if i % 11 == 7:
-                    body = "<rss><channel><item>"
-                elif i % 2 == 0:
-                    d0 = format_datetime(
-                        datetime.fromtimestamp(e0, timezone.utc)
-                    )
-                    d1 = format_datetime(
-                        datetime.fromtimestamp(e0 + 1800, timezone.utc)
-                    )
-                    body = (
-                        f'<rss version="2.0"><channel><title>c{i}</title>'
-                        f"<item><title>item {i} 0</title>"
-                        f"<link> http://feed.test/r{i}/a </link>"
-                        f"<pubDate>{d0}</pubDate></item>"
-                        f"<item><title>item {i} 1</title>"
-                        f"<link>http://feed.test/r{i}/b</link>"
-                        f"<pubDate>{d1}</pubDate></item>"
-                        f"<item><title>no link {i}</title></item>"
-                        "</channel></rss>"
-                    )
-                else:
-                    u0 = (
-                        datetime.fromtimestamp(e0, timezone.utc)
-                        .isoformat()
-                        .replace("+00:00", "Z")
-                    )
-                    u1 = (
-                        datetime.fromtimestamp(e0 + 1800, timezone.utc)
-                        .isoformat()
-                        .replace("+00:00", "Z")
-                    )
-                    body = (
-                        f'<feed xmlns="http://www.w3.org/2005/Atom">'
-                        f"<entry><title>entry {i} 0</title>"
-                        f"<updated>{u0}</updated>"
-                        f'<link href="http://feed.test/a{i}/0"/>'
-                        f'<link rel="enclosure" '
-                        f'href="http://feed.test/img/{i}.jpg"/></entry>'
-                        f"<entry><title>entry {i} 1</title>"
-                        f"<updated>{u1}</updated>"
-                        f'<link rel="alternate" '
-                        f'href="http://feed.test/a{i}/1"/></entry></feed>'
-                    )
-                urls.append(f"http://feed.test/{i}/feed.xml")
-                bodies.append(body)
-            if urls:
-                yield pd.DataFrame({"url": urls, "body": bodies})
-
-    feeds = ids.mapInPandas(gen, "url string, body string")
+    feeds = map_rows(ids, row, "url string, body string")
     it = F.col("it")
     return feeds.select(
         "url", F.posexplode(feed_items_udf("body")).alias("pos", "it")
@@ -2949,10 +2876,8 @@ def q_image_histogram(spark, sf_dir):
     dequantized first), so bins/min/max/ppm are pure integer folds over
     generate_series.  Truncated payloads (i%9==4) stay ok=false with
     NULL stats and exposure_ok=false."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        image_histogram,
-        synth_rowgrad_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import image_histogram
+    from linkkchecker_net_spark.fixtures.images import synth_rowgrad_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -3476,10 +3401,8 @@ def q_color_palette(spark, sf_dir):
     cell; the 2-bit cell is codec-invariant under the lossy stand-in's
     bucket-center reconstruction, so no dequant CASE is needed).
     Truncated payloads (i%9==4) keep one ok=false row."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        color_palette,
-        synth_rgbstripe_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import color_palette
+    from linkkchecker_net_spark.fixtures.images import synth_rgbstripe_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -4185,10 +4108,8 @@ def q_colorfulness(spark, sf_dir):
     colorfulness) over the channel-distinct stripe corpus: Spark decodes
     real pixels (lossy rows through the bucket-center recon); the oracle
     prices each stripe row arithmetically with the same recon formula."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        colorfulness,
-        synth_rgbstripe_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import colorfulness
+    from linkkchecker_net_spark.fixtures.images import synth_rgbstripe_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -4249,10 +4170,8 @@ def q_contrast(spark, sf_dir):
     over the stripe corpus: Spark decodes real pixels; the oracle prices
     each stripe row's 2R+5G+B luma arithmetically (lossy rows through
     the same bucket-center recon) — all-integer, no float margins."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        contrast_stats,
-        synth_rgbstripe_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import contrast_stats
+    from linkkchecker_net_spark.fixtures.images import synth_rgbstripe_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -4770,10 +4689,8 @@ def q_tile_neardup(spark, sf_dir):
     from the group structure — within each complete 4-image group the
     shared-quadrant counts are (v0,v1)=3, (v0,v2)=2, (v1,v2)=1 and 0
     with v3, so the ≥2 pair set is exactly {(v0,v1,3), (v0,v2,2)}."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        synth_tiled_corpus,
-        tile_neardup,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import tile_neardup
+    from linkkchecker_net_spark.fixtures.images import synth_tiled_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -5574,10 +5491,8 @@ def q_pixel_verify(spark, sf_dir):
     must pass the 2% MAE gate), distinct stripes otherwise (fail).
     Spark decodes real containers; the oracle prices every pixel of
     both sides arithmetically through the same codec formulas."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        pixel_verify,
-        synth_twin_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import pixel_verify
+    from linkkchecker_net_spark.fixtures.images import synth_twin_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -6534,10 +6449,8 @@ def q_format_sniff(spark, sf_dir):
     (cycle-shifted), bytes replaced with a junk container on i%7==3 —
     match / mismatch / unknown all fire; n_bytes dropped from the
     oracle view (zlib payload sizes aren't SQL-priceable)."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        format_sniff,
-        synth_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import format_sniff
+    from linkkchecker_net_spark.fixtures.images import synth_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).filter(F.col("doc_id") < 150).select(
@@ -6569,10 +6482,8 @@ def q_image_entropy(spark, sf_dir):
     image_histogram's does, then reproduces the fixed-order double
     entropy fold; truncated payloads (i%9==4) stay ok=false with NULL
     entropy and low_entropy=true."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        image_entropy,
-        synth_rowgrad_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import image_entropy
+    from linkkchecker_net_spark.fixtures.images import synth_rowgrad_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -7222,10 +7133,8 @@ def q_image_quality_model(spark, sf_dir):
     truncated payloads (i%9==4) stay ok=false / NULL score / keep=false.
     The oracle prices the bins exactly as image_entropy's does, then
     replays the integer dot product."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        image_model_score,
-        synth_rowgrad_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import image_model_score
+    from linkkchecker_net_spark.fixtures.images import synth_rowgrad_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -7293,10 +7202,8 @@ def q_image_flip_dedup(spark, sf_dir):
     pair set structural (every canonical hash distinct otherwise —
     see synth_asym_corpus), minus the arms where either side's payload
     is truncated (i%9==4)."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        mirror_phash_pairs,
-        synth_asym_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import mirror_phash_pairs
+    from linkkchecker_net_spark.fixtures.images import synth_asym_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -7503,10 +7410,8 @@ def q_tile_periodicity(spark, sf_dir):
     degenerate every-period tile, best 2; i=251's zero-mass image
     exercises the NULL guard).  The oracle prices every column sum and
     replays the p=2..8 scan."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        synth_periodic_corpus,
-        tile_periodicity,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import tile_periodicity
+    from linkkchecker_net_spark.fixtures.images import synth_periodic_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -7532,10 +7437,8 @@ def q_text_in_image(spark, sf_dir):
     sits above the texty jump band (its occasional low-count draws
     flag honestly on BOTH engines — the oracle replays the jump
     counts, not the verdict labels)."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        synth_textband_corpus,
-        text_in_image,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import text_in_image
+    from linkkchecker_net_spark.fixtures.images import synth_textband_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))
@@ -7674,10 +7577,8 @@ def q_corner_overlay(spark, sf_dir):
     (w/4-1)*4 > 8 (never flat), and the md5-noise arm's corner tile
     ranges are replayed exactly from the same per-column values the
     text_in_image oracle prices."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        corner_overlay,
-        synth_textband_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import corner_overlay
+    from linkkchecker_net_spark.fixtures.images import synth_textband_corpus
 
     _prep(spark)
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("id"))

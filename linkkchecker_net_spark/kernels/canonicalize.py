@@ -182,8 +182,8 @@ def authority_of(url: str | None) -> str | None:
 def base_prefix_of(url: str | None) -> str | None:
     """The string prefix a URL must carry for ``seed.IsBaseOf(url)`` to
     hold: ``scheme://authority`` + the seed's path truncated through its
-    last '/' (the .NET segment truncation).  For canonicalized URLs,
-    ``url.startswith(base_prefix_of(seed))`` ⟺ ``is_base_of(seed, url)``.
+    last '/' (the .NET segment truncation).  For canonicalized URLs the
+    prefix test is exact in both directions.
 
     The multi-seed checker gate collects the DISTINCT base prefixes of all
     seeds — formulaic seed lists share a handful of directories, so the
@@ -193,23 +193,6 @@ def base_prefix_of(url: str | None) -> str | None:
         return None
     p = urlsplit(url).path or "/"
     return auth + (p[: p.rfind("/") + 1] or "/")
-
-
-def is_base_of(base: str | None, url: str | None) -> bool:
-    """.NET ``Uri.IsBaseOf`` (CanonicalChecker.cs:34,
-    DescriptionLengthChecker.cs:36 — ``steps[0].Uri.IsBaseOf(uri)``):
-    scheme+authority must match, then the base's path truncated through
-    its LAST '/' (dropping any trailing segment, per .NET segment
-    semantics) must prefix the target's path."""
-    if base is None or url is None:
-        return False
-    auth = authority_of(base)
-    if auth is None or auth != authority_of(url):
-        return False
-    bp = urlsplit(base).path or "/"
-    bp = bp[: bp.rfind("/") + 1] or "/"
-    tp = urlsplit(url).path or "/"
-    return tp.startswith(bp)
 
 
 @F.pandas_udf(T.StringType())

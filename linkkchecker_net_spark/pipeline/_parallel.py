@@ -1,4 +1,4 @@
-"""Scan-parallelism guard for CPU-heavy map stages.
+"""Scan-parallelism guard and the per-row Python map for CPU-heavy stages.
 
 Guide §2.5 "input skew": a small parquet file is one (or two) scan
 partitions — splittable only at row-group boundaries, so
@@ -17,11 +17,20 @@ instead of a constant tuned for either local mode or the cluster.  The
 round-robin exchange it inserts on the small side costs one pass of the
 (small by construction) input and is retry-deterministic (Spark sorts
 before round-robin repartition, SPARK-23207).
+
+`map_rows` is the one place where per-row Python meets Arrow batches: every
+per-image pass (decode + pixel math, fixture generation) is a function from
+one input row to 0..n output tuples, and `map_rows` runs it as one
+`mapInPandas` pass.
 """
 
 from __future__ import annotations
 
+from typing import Callable, Iterable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import _parse_datatype_string
 
 
 def spread_scan(df: DataFrame, target: "int | None" = None) -> DataFrame:
@@ -34,3 +43,33 @@ def spread_scan(df: DataFrame, target: "int | None" = None) -> DataFrame:
     if current >= target or target <= 1:
         return df
     return df.repartition(target)
+
+
+def row_batches(
+    fn: Callable[..., Iterable[tuple]], names: list[str]
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The `mapInPandas` batch function behind `map_rows`: `fn(*row)` per
+    input row, its tuples gathered into one frame per batch.  A batch
+    that yields no rows yields no frame — pandas builds empty-list
+    columns as float64, which Arrow cannot cast to string/binary."""
+
+    def batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            rows = [
+                out
+                for row in pdf.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            if rows:
+                yield pd.DataFrame.from_records(rows, columns=names)
+
+    return batches
+
+
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """Per-row Python map over `df`: `fn` takes `df`'s columns in order and
+    yields 0..n tuples in `schema` field order."""
+    names = _parse_datatype_string(schema).names
+    return df.mapInPandas(row_batches(fn, names), schema)

@@ -71,6 +71,10 @@ def pagerank(
         return nodes.select(
             F.col(node_col), F.lit(0.0).alias("pagerank")
         )
+    if teleport is not None:
+        n_t = teleport.count()  # metadata-sized
+        if n_t == 0:
+            raise ValueError("teleport set is empty")
     deg = edges.groupBy(src_col).agg(
         F.count("*").cast("double").alias("outdeg")
     )
@@ -86,9 +90,6 @@ def pagerank(
     )
     pinned = nodes.select(F.col(node_col).alias("id"))
     if teleport is not None:
-        n_t = teleport.count()  # metadata-sized
-        if n_t == 0:
-            raise ValueError("teleport set is empty")
         pinned = pinned.join(
             teleport.select(F.col(node_col).alias("id"))
             .distinct()

@@ -1,19 +1,18 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary image payloads + typed metadata.
 
-Images/audio/video ride as `binary` columns with typed metadata beside
-them; every transform is a `mapInPandas` Arrow pass so pixels never cross
-the JVM↔Python boundary row-at-a-time.  The sandbox has no image/audio
-libs, so:
-
-  * images use the repo's own pure-numpy codecs (real decode);
-  * audio decode / video frame-sampling are STUBBED behind
-    `NotImplementedError` with deterministic-fake fallbacks — the Spark
-    plumbing (schema, batch shape, partitioning) is real and tested,
-    the codec call is the only swap point for production.
+Images ride as `binary` columns with typed metadata beside them, decoded
+by the repo's own pure-numpy codecs (imaging.py).  Every per-image pass is
+one Arrow-batched `map_rows` over (id, bytes, fmt) columns — decode plus
+pixel math per row, scalars out — so bytes die at the stage boundary and
+only scalars cross any shuffle; `image_metadata`, the gated validate hot
+path, keeps its own batch loop.  The deterministic corpora these operators
+are checked on live in `fixtures/images.py`.
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
 from typing import Iterator
 
 import numpy as np
@@ -22,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as PWindow
 from pyspark.sql import functions as F
 
-from ._parallel import spread_scan
+from ._parallel import map_rows
 
 from linkkchecker_net_spark import imaging
 
@@ -60,39 +59,12 @@ def _image_features(arr: np.ndarray) -> dict:
     )
 
 
-def synth_corpus(spark, ids_df: DataFrame, fmt_cycle=("png", "jpeg", "gif")) -> DataFrame:
-    """Deterministic corpus synthesis from an id column (sandbox stand-in
-    for reading a real image corpus): seeded numpy per id → encoded bytes.
-    mapInPandas so generation is distributed and Arrow-batched."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [], "fmt": [],
-                   "caption": [], "phash": []}
-            for i in pdf["id"].astype(int):
-                rng = np.random.default_rng(42 * 1_000_003 + int(i))
-                w = int(rng.integers(16, 40))
-                h = int(rng.integers(16, 40))
-                arr = imaging.make_image(rng, w, h)
-                fmt = fmt_cycle[int(i) % len(fmt_cycle)]
-                data = imaging.encode_image(arr, fmt)
-                out["image_id"].append(f"img_{int(i):06d}")
-                out["bytes"].append(data)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append(fmt)
-                out["caption"].append(f"caption of img_{int(i):06d}")
-                out["phash"].append(
-                    imaging.phash64(imaging.decode_image(data, fmt))
-                )
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(
-        gen,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
-    )
+def _decode(data, fmt: str) -> np.ndarray | None:
+    """Decoded pixels of one payload, or None when it does not decode."""
+    try:
+        return imaging.decode_image(bytes(data), fmt)
+    except Exception:
+        return None
 
 
 def image_metadata(
@@ -525,64 +497,15 @@ def nn_thumbnails(corpus: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFram
     ``tests/test_no_shadowed_defs.py`` now pins the whole package against the
     duplicate-top-level-def class of bug."""
 
-    def rz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for r in pdf.itertuples(index=False):
-                arr = imaging.decode_image(bytes(r.bytes), r.fmt)
-                ys = (np.arange(out_h) * arr.shape[0] // out_h).clip(0, arr.shape[0] - 1)
-                xs = (np.arange(out_w) * arr.shape[1] // out_w).clip(0, arr.shape[1] - 1)
-                small = arr[ys][:, xs]
-                ids.append(r.image_id)
-                blobs.append(imaging.encode_lossless(small))
-            if ids:
-                yield pd.DataFrame({"image_id": ids, "thumb": blobs})
+    def row(iid, fmt, data):
+        arr = imaging.decode_image(bytes(data), fmt)
+        ys = (np.arange(out_h) * arr.shape[0] // out_h).clip(0, arr.shape[0] - 1)
+        xs = (np.arange(out_w) * arr.shape[1] // out_w).clip(0, arr.shape[1] - 1)
+        yield iid, imaging.encode_lossless(arr[ys][:, xs])
 
-    return corpus.select("image_id", "fmt", "bytes").mapInPandas(
-        rz, "image_id string, thumb binary"
-    )
-
-
-def decode_audio_stub(payload: bytes) -> np.ndarray:
-    """STUB — no audio codec in this container.  Production swaps in
-    soundfile/ffmpeg here; the mapInPandas harness around it is real."""
-    raise NotImplementedError("audio decode requires an audio codec library")
-
-
-def sample_video_frames_stub(payload: bytes, every_n: int = 30) -> list[bytes]:
-    """STUB — no video codec in this container (production: PyAV/ffmpeg)."""
-    raise NotImplementedError("video frame sampling requires a video codec library")
-
-
-def audio_metadata(audio: DataFrame, allow_fake: bool = True) -> DataFrame:
-    """Audio feature plumbing: schema + batching are real; decode is the
-    stub (deterministic fake when allow_fake, so the pipeline is testable)."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, secs, rates, ok = [], [], [], []
-            for r in pdf.itertuples(index=False):
-                data = bytes(r.payload)
-                try:
-                    wave = decode_audio_stub(data)
-                    dur, sr, good = len(wave) / 16000.0, 16000, True
-                except NotImplementedError:
-                    if not allow_fake:
-                        raise
-                    # deterministic fake: derive from payload bytes
-                    dur, sr, good = len(data) / 32000.0, 16000, False
-                ids.append(r.audio_id)
-                secs.append(dur)
-                rates.append(sr)
-                ok.append(good)
-            if ids:
-                yield pd.DataFrame(
-                    {"audio_id": ids, "duration_sec": secs,
-                     "sample_rate": rates, "real_decode": ok}
-                )
-
-    return audio.select("audio_id", "payload").mapInPandas(
-        extract, "audio_id string, duration_sec double, sample_rate int, real_decode boolean"
+    return map_rows(
+        corpus.select("image_id", "fmt", "bytes"), row,
+        "image_id string, thumb binary",
     )
 
 
@@ -710,68 +633,18 @@ def detect_borders(corpus: DataFrame, luma_thresh: float = 16.0) -> DataFrame:
     die at the stage boundary, scalars out).  luma_thresh=16 is the
     broadcast-black level FFmpeg cropdetect defaults to; the lossy
     codec's ±2 error stays far inside it.  Scale: map-only scan."""
-    from linkkchecker_net_spark import imaging
+    def row(iid, data, fmt):
+        arr = imaging.decode_image(bytes(data), fmt)
+        t, b, l, r = _crop_box(arr, luma_thresh)
+        h, w = arr.shape[0], arr.shape[1]
+        yield (
+            iid, fmt, w, h, t, b, l, r, max(w - l - r, 0), max(h - t - b, 0),
+            bool(t or b or l or r),
+        )
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "image_id", "fmt", "w", "h", "top", "bottom", "left",
-                "right", "content_w", "content_h", "has_border")}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                arr = imaging.decode_image(bytes(data), fmt)
-                t, b, l, r = _crop_box(arr, luma_thresh)
-                h, w = arr.shape[0], arr.shape[1]
-                out["image_id"].append(iid)
-                out["fmt"].append(fmt)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["top"].append(t)
-                out["bottom"].append(b)
-                out["left"].append(l)
-                out["right"].append(r)
-                out["content_w"].append(max(w - l - r, 0))
-                out["content_h"].append(max(h - t - b, 0))
-                out["has_border"].append(bool(t or b or l or r))
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        scan, BORDER_SCHEMA
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row, BORDER_SCHEMA
     )
-
-
-def synth_bordered_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Deterministic letterbox fixture: per id, a bright checkerboard
-    content block (channel0 alternates 128/255 — every row AND column of
-    content carries a >=128 pixel, so no content line can ever classify
-    as border, lossy ±2 included) padded with black borders of
-    arithmetic widths top=id%4, bottom=(id//4)%3, left=(id//12)%3,
-    right=(id//36)%2."""
-    from linkkchecker_net_spark import imaging
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "fmt": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                t, b = i % 4, (i // 4) % 3
-                l, r = (i // 12) % 3, (i // 36) % 2
-                w0, h0 = 16 + i % 9, 12 + i % 7
-                ys, xs = np.mgrid[0:h0, 0:w0]
-                content = np.zeros((h0, w0, 3), dtype=np.uint8)
-                content[..., 0] = 128 + 127 * ((xs + ys) % 2)
-                arr = np.zeros((h0 + t + b, w0 + l + r, 3), dtype=np.uint8)
-                arr[t:t + h0, l:l + w0] = content
-                fmt = ("png", "jpeg", "gif")[i % 3]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(imaging.encode_image(arr, fmt))
-                out["fmt"].append(fmt)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(gen, "image_id string, bytes binary, fmt string")
 
 
 # ---------------------------------------------------------------------------
@@ -791,75 +664,21 @@ def dhash_neardup_pairs(corpus: DataFrame, max_hamming: int = 3) -> DataFrame:
     misses; a production dedup ORs both pair sets (same shape as
     caption_phash_neardup_pairs' two-leg merge).
     """
-    from linkkchecker_net_spark import imaging
     from linkkchecker_net_spark.pipeline.dedup import hamming_blocked_pairs
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "dhash": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    continue  # undecodable: excluded, like phash path
-                out["image_id"].append(iid)
-                out["dhash"].append(imaging.dhash64(arr))
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            return  # undecodable: excluded, like phash path
+        yield iid, imaging.dhash64(arr)
 
-    hashed = corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        scan, "image_id string, dhash long"
+    hashed = map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row,
+        "image_id string, dhash long",
     )
     return hamming_blocked_pairs(
         hashed, "image_id", "dhash", max_hamming, "img_a", "img_b"
     )
-
-
-def synth_gradient_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Deterministic dhash fixture with EXACT pair distances: each group
-    g = id//2 draws 64 random step signs (seeded by g); block means walk
-    ±14 from 128 along each row, 8×8-px blocks (64×72 image) — so the
-    dhash bits ARE the step signs by construction.  The odd member flips
-    the first g%6 steps → intra-pair hamming is exactly g%6; cross-group
-    patterns are independent draws (measured min cross hamming 17 over
-    the 240-image fixture, lossy round-trip included — margins verified
-    offline, see q_image_dhash docstring).  The ±14 step with ±2 lossy
-    pixel error leaves every gradient sign a ≥12-point margin: hashes
-    are codec-independent."""
-    from linkkchecker_net_spark import imaging
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "fmt": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                g, odd = divmod(i, 2)
-                rng = np.random.default_rng(70_000_003 + g)
-                steps = rng.integers(0, 2, 64)
-                if odd:
-                    steps = steps.copy()
-                    steps[: g % 6] ^= 1
-                m = np.empty((8, 9))
-                for r in range(8):
-                    m[r, 0] = 128.0
-                    for c in range(8):
-                        m[r, c + 1] = m[r, c] + (
-                            14.0 if steps[r * 8 + c] else -14.0
-                        )
-                arr = np.repeat(np.repeat(m, 8, axis=0), 8, axis=1)
-                img = np.stack([arr] * 3, axis=2).clip(0, 255).astype(
-                    np.uint8
-                )
-                fmt = ("png", "jpeg", "gif")[i % 3]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(imaging.encode_image(img, fmt))
-                out["fmt"].append(fmt)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(gen, "image_id string, bytes binary, fmt string")
 
 
 # ---------------------------------------------------------------------------
@@ -891,43 +710,27 @@ def laplacian_sharpness(
     integer per-pixel energy, bit-identical anywhere.  Scale: one
     mapInPandas decode scan, bytes die at the stage boundary, map-only.
     """
-    from linkkchecker_net_spark import imaging
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            return  # undecodable: excluded, like the hash paths
+        g = arr.astype(np.int64).sum(axis=2)
+        h, w = g.shape
+        if h < 3 or w < 3:
+            lap, interior = 0, 0
+        else:
+            c = g[1:-1, 1:-1]
+            L = (
+                4 * c
+                - g[:-2, 1:-1] - g[2:, 1:-1]
+                - g[1:-1, :-2] - g[1:-1, 2:]
+            )
+            lap = int((L * L).sum())
+            interior = (h - 2) * (w - 2)
+        yield iid, fmt, w, h, lap, interior
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "image_id", "fmt", "w", "h", "lap_sq_sum", "interior_px")}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    continue  # undecodable: excluded, like the hash paths
-                g = arr.astype(np.int64).sum(axis=2)
-                h, w = g.shape
-                if h < 3 or w < 3:
-                    lap, interior = 0, 0
-                else:
-                    c = g[1:-1, 1:-1]
-                    L = (
-                        4 * c
-                        - g[:-2, 1:-1] - g[2:, 1:-1]
-                        - g[1:-1, :-2] - g[1:-1, 2:]
-                    )
-                    lap = int((L * L).sum())
-                    interior = (h - 2) * (w - 2)
-                out["image_id"].append(iid)
-                out["fmt"].append(fmt)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["lap_sq_sum"].append(lap)
-                out["interior_px"].append(interior)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    scanned = corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        scan,
+    scanned = map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row,
         "image_id string, fmt string, w int, h int, lap_sq_sum long, "
         "interior_px long",
     )
@@ -937,41 +740,6 @@ def laplacian_sharpness(
         score.alias("sharpness_x100"),
         (score >= F.lit(int(sharp_thresh_x100))).alias("sharp"),
     )
-
-
-def synth_striped_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Deterministic sharpness fixture with EXACT Laplacian energy:
-    32×32 vertical stripes of width s = 2^(1+id%4), levels A=2 and
-    B=2+Δ with Δ = 4·(1+id%7) — both lossy-codec bucket centers
-    (v ≡ 2 mod 4), so every codec round-trips the pixels EXACTLY and
-    the energy is pure arithmetic: boundaries contribute 2 columns ×
-    (h−2) rows × (3Δ)², i.e. lap_sq_sum = 540·(32/s − 1)·Δ².  Wider
-    stripes = fewer edges = blurrier, spanning ~1k–700k in
-    sharpness_x100 across the (s, Δ) grid."""
-    from linkkchecker_net_spark import imaging
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "fmt": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                s = 1 << (1 + i % 4)
-                delta = 4 * (1 + i % 7)
-                xs = np.arange(32)
-                row = np.where((xs // s) % 2 == 0, 2, 2 + delta).astype(
-                    np.uint8
-                )
-                arr = np.repeat(
-                    np.tile(row, (32, 1))[:, :, None], 3, axis=2
-                )
-                fmt = ("png", "jpeg", "gif")[i % 3]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(imaging.encode_image(arr, fmt))
-                out["fmt"].append(fmt)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(gen, "image_id string, bytes binary, fmt string")
 
 
 # ---------------------------------------------------------------------------
@@ -1012,102 +780,28 @@ def meta_consistency(corpus: DataFrame) -> DataFrame:
     tolerance policy can re-gate without re-decoding.  Scale: map-only
     mapInPandas, bytes die at the stage boundary.
     """
-    from linkkchecker_net_spark import imaging
+    def row(iid, data, fmt, w, h, ph):
+        data = bytes(data)
+        afmt = sniff_fmt(data)
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield (
+                iid, fmt, afmt, int(w), int(h), None, None, False, False,
+                False, None, False, False,
+            )
+            return
+        ah, aw = arr.shape[0], arr.shape[1]
+        hamm = imaging.hamming64(imaging.phash64(arr), int(ph))
+        dims_ok = aw == int(w) and ah == int(h)
+        fmt_ok = afmt == fmt
+        yield (
+            iid, fmt, afmt, int(w), int(h), aw, ah, True, dims_ok, fmt_ok,
+            hamm, hamm == 0, bool(dims_ok and fmt_ok and hamm == 0),
+        )
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = ("image_id", "fmt", "actual_fmt", "w", "h", "actual_w",
-                    "actual_h", "decodable", "dims_ok", "fmt_ok",
-                    "phash_hamming", "phash_ok", "ok")
-            out = {k: [] for k in cols}
-            for iid, data, fmt, w, h, ph in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"],
-                pdf["h"], pdf["phash"],
-            ):
-                data = bytes(data)
-                afmt = sniff_fmt(data)
-                try:
-                    arr = imaging.decode_image(data, fmt)
-                except Exception:
-                    arr = None
-                row = dict.fromkeys(cols)
-                row.update(image_id=iid, fmt=fmt, w=int(w), h=int(h))
-                if arr is None:
-                    row.update(actual_fmt=afmt, decodable=False,
-                               dims_ok=False, fmt_ok=False,
-                               phash_ok=False, ok=False)
-                else:
-                    ah, aw = arr.shape[0], arr.shape[1]
-                    hamm = imaging.hamming64(
-                        imaging.phash64(arr), int(ph)
-                    )
-                    row.update(
-                        actual_fmt=afmt, actual_w=aw, actual_h=ah,
-                        decodable=True,
-                        dims_ok=(aw == int(w) and ah == int(h)),
-                        fmt_ok=(afmt == fmt),
-                        phash_hamming=hamm,
-                        phash_ok=(hamm == 0),
-                    )
-                    row["ok"] = bool(
-                        row["dims_ok"] and row["fmt_ok"] and row["phash_ok"]
-                    )
-                for k in cols:
-                    out[k].append(row[k])
-            if out["image_id"]:
-                yield pd.DataFrame(out).astype(
-                    {"actual_w": "Int32", "actual_h": "Int32",
-                     "phash_hamming": "Int64"}
-                )
-
-    return corpus.select(
-        "image_id", "bytes", "fmt", "w", "h", "phash"
-    ).mapInPandas(scan, META_AUDIT_SCHEMA)
-
-
-def synth_meta_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Deterministic audit fixture in the EXACT north-rule table shape:
-    per id a gradient tile is encoded, decoded back, and its TRUE
-    (w, h, fmt, phash) recorded — then one declared fact is corrupted by
-    arithmetic rule: i%7==1 → w+1, i%7==3 → fmt rotated, i%7==5 →
-    phash⊕1, i%7==6 → bytes truncated to 6 (undecodable); else clean.
-    Because the declared phash is computed from the ROUND-TRIPPED
-    pixels, clean rows match bit-exactly on every codec — no margin
-    analysis needed."""
-    from linkkchecker_net_spark import imaging
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [],
-                   "fmt": [], "caption": [], "phash": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                w, h = 16 + i % 5, 12 + i % 4
-                ys, xs = np.mgrid[0:h, 0:w]
-                arr = np.stack(
-                    [((xs * 7 + ys * 13 + i) % 17 * 15) % 256] * 3, axis=2
-                ).astype(np.uint8)
-                fmt = ("png", "jpeg", "gif")[i % 3]
-                data = imaging.encode_image(arr, fmt)
-                dec = imaging.decode_image(data, fmt)
-                ph = imaging.phash64(dec)
-                m = i % 7
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(data[:6] if m == 6 else data)
-                out["w"].append(w + (1 if m == 1 else 0))
-                out["h"].append(h)
-                out["fmt"].append(
-                    ("png", "jpeg", "gif")[(i + 1) % 3] if m == 3 else fmt
-                )
-                out["caption"].append(f"tile {i}")
-                out["phash"].append(ph ^ 1 if m == 5 else ph)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(
-        gen,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt", "w", "h", "phash"), row,
+        META_AUDIT_SCHEMA,
     )
 
 
@@ -1120,57 +814,6 @@ INLINE_IMG_SCHEMA = (
     "url string, img_pos int, fmt string, ok boolean, w int, h int, "
     "pix_sum long"
 )
-
-
-def synth_inline_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Deterministic HTML pages with inline base64 images: per id, img 0
-    is a row-gradient tile (pixel value (i*37+row) % 251 on every
-    channel/column) in the i%3-rotated codec; i%4==2 pages add a second
-    4x4 constant-fill PNG; i%9==4 pages truncate img 0's payload to 6
-    bytes (valid base64, undecodable container); i%6==1 pages carry a
-    data:text/plain URI and i%5==3 a plain http <img> — both must be
-    ignored by the extractor.  Every decodable pixel sum is an
-    arithmetic function of id, so the DuckDB oracle knows the answer
-    WITHOUT decoding — Spark must earn it from the payload."""
-    import base64
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, bodies = [], []
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                w, h = 8 + (i % 5) * 4, 6 + (i % 7) * 2
-                col = ((i * 37 + np.arange(h)) % 251).astype(np.uint8)
-                arr = np.repeat(col[:, None], w, axis=1)
-                arr = np.stack([arr] * 3, axis=2)
-                fmt = ("png", "jpeg", "gif")[i % 3]
-                data = imaging.encode_image(arr, fmt)
-                if i % 9 == 4:
-                    data = data[:6]
-                b64 = base64.b64encode(data).decode("ascii")
-                parts = [f'<img src="data:image/{fmt};base64,{b64}">']
-                if i % 6 == 1:
-                    t64 = base64.b64encode(b"not an image").decode("ascii")
-                    parts.append(
-                        f'<a href="data:text/plain;base64,{t64}">t</a>'
-                    )
-                if i % 5 == 3:
-                    parts.append(f'<img src="http://cdn.test/x/{i}.jpg">')
-                if i % 4 == 2:
-                    c = (i * 11) % 251
-                    tiny = np.full((4, 4, 3), c, dtype=np.uint8)
-                    b2 = base64.b64encode(
-                        imaging.encode_image(tiny, "png")
-                    ).decode("ascii")
-                    parts.append(f'<img src="data:image/png;base64,{b2}">')
-                urls.append(f"http://in.test/p{i}")
-                bodies.append(
-                    "<html><body>" + "".join(parts) + "</body></html>"
-                )
-            if urls:
-                yield pd.DataFrame({"url": urls, "body": bodies})
-
-    return spread_scan(ids_df).mapInPandas(gen, "url string, body string")
 
 
 def inline_images(
@@ -1208,31 +851,17 @@ def inline_images(
         F.unbase64(F.regexp_extract("uri", _DATA_B64_PAT, 1)).alias("data"),
     )
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"url": [], "img_pos": [], "fmt": [], "ok": [],
-                   "w": [], "h": [], "pix_sum": []}
-            for url, pos, fmt, data in zip(
-                pdf["url"], pdf["img_pos"], pdf["mime_fmt"], pdf["data"]
-            ):
-                out["url"].append(url)
-                out["img_pos"].append(int(pos))
-                out["fmt"].append(fmt)
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                    out["ok"].append(True)
-                    out["w"].append(arr.shape[1])
-                    out["h"].append(arr.shape[0])
-                    out["pix_sum"].append(int(arr.astype(np.int64).sum()))
-                except Exception:
-                    out["ok"].append(False)
-                    out["w"].append(None)
-                    out["h"].append(None)
-                    out["pix_sum"].append(None)
-            if out["url"]:
-                yield pd.DataFrame(out)
+    def row(url, pos, fmt, data):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield url, int(pos), fmt, False, None, None, None
+            return
+        yield (
+            url, int(pos), fmt, True, arr.shape[1], arr.shape[0],
+            int(arr.astype(np.int64).sum()),
+        )
 
-    return uris.mapInPandas(dec, INLINE_IMG_SCHEMA)
+    return map_rows(uris, row, INLINE_IMG_SCHEMA)
 
 
 # ------------------------------------------------------------- image resize
@@ -1240,45 +869,6 @@ RESIZE_SCHEMA = (
     "image_id string, ok boolean, w int, h int, rw int, rh int, "
     "pix_sum long, rpix_sum long"
 )
-
-
-def synth_rowgrad_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """North-rule-shaped corpus whose pixels are a pure row gradient:
-    value (i*37 + row) % 251 on every channel/column, w = 8+(i%5)*4 and
-    h = 6+(i%7)*2 (both even — factor-2 blocks tile exactly), codec
-    rotated by i%3, bytes truncated on i%9==4.  Every block-mean the
-    resize computes is therefore arithmetic in (i, row) — the oracle
-    can price the whole transform without pixels."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [],
-                   "fmt": [], "caption": [], "phash": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                w, h = 8 + (i % 5) * 4, 6 + (i % 7) * 2
-                col = ((i * 37 + np.arange(h)) % 251).astype(np.uint8)
-                arr = np.stack([np.repeat(col[:, None], w, axis=1)] * 3,
-                               axis=2)
-                fmt = ("png", "jpeg", "gif")[i % 3]
-                data = imaging.encode_image(arr, fmt)
-                if i % 9 == 4:
-                    data = data[:6]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(data)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append(fmt)
-                out["caption"].append(f"grad {i}")
-                out["phash"].append(0)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(
-        gen,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
-    )
 
 
 def resize_images(corpus: DataFrame, factor: int = 2) -> DataFrame:
@@ -1300,40 +890,25 @@ def resize_images(corpus: DataFrame, factor: int = 2) -> DataFrame:
     any corpus size.
     """
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ok": [], "w": [], "h": [],
-                   "rw": [], "rh": [], "pix_sum": [], "rpix_sum": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                out["image_id"].append(iid)
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["ok"].append(False)
-                    for k in ("w", "h", "rw", "rh", "pix_sum", "rpix_sum"):
-                        out[k].append(None)
-                    continue
-                h, w, _ = arr.shape
-                rh, rw = h // factor, w // factor
-                crop = arr[: rh * factor, : rw * factor].astype(np.int64)
-                rs = (
-                    crop.reshape(rh, factor, rw, factor, 3).sum(axis=(1, 3))
-                    // (factor * factor)
-                )
-                out["ok"].append(True)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["rw"].append(rw)
-                out["rh"].append(rh)
-                out["pix_sum"].append(int(arr.astype(np.int64).sum()))
-                out["rpix_sum"].append(int(rs.sum()))
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield iid, False, None, None, None, None, None, None
+            return
+        h, w, _ = arr.shape
+        rh, rw = h // factor, w // factor
+        crop = arr[: rh * factor, : rw * factor].astype(np.int64)
+        rs = (
+            crop.reshape(rh, factor, rw, factor, 3).sum(axis=(1, 3))
+            // (factor * factor)
+        )
+        yield (
+            iid, True, w, h, rw, rh, int(arr.astype(np.int64).sum()),
+            int(rs.sum()),
+        )
 
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec, RESIZE_SCHEMA
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row, RESIZE_SCHEMA
     )
 
 
@@ -1367,46 +942,24 @@ def image_histogram(corpus: DataFrame) -> DataFrame:
     resize_images at any corpus size.
     """
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ok": [], "b0": [], "b1": [], "b2": [],
-                   "b3": [], "vmin": [], "vmax": [], "dark_ppm": [],
-                   "bright_ppm": [], "exposure_ok": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                out["image_id"].append(iid)
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["ok"].append(False)
-                    for k in ("b0", "b1", "b2", "b3", "vmin", "vmax",
-                              "dark_ppm", "bright_ppm"):
-                        out[k].append(None)
-                    out["exposure_ok"].append(False)
-                    continue
-                flat = arr.reshape(-1)
-                bins = np.bincount(flat // 64, minlength=4)
-                total = int(flat.size)
-                dark = 1_000_000 * int(bins[0]) // total
-                bright = 1_000_000 * int(bins[3]) // total
-                out["ok"].append(True)
-                out["b0"].append(int(bins[0]))
-                out["b1"].append(int(bins[1]))
-                out["b2"].append(int(bins[2]))
-                out["b3"].append(int(bins[3]))
-                out["vmin"].append(int(flat.min()))
-                out["vmax"].append(int(flat.max()))
-                out["dark_ppm"].append(dark)
-                out["bright_ppm"].append(bright)
-                out["exposure_ok"].append(
-                    dark <= EXPOSURE_MAX_PPM and bright <= EXPOSURE_MAX_PPM
-                )
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield (iid, False) + (None,) * 8 + (False,)
+            return
+        flat = arr.reshape(-1)
+        bins = np.bincount(flat // 64, minlength=4)
+        total = int(flat.size)
+        dark = 1_000_000 * int(bins[0]) // total
+        bright = 1_000_000 * int(bins[3]) // total
+        yield (
+            iid, True, *(int(b) for b in bins[:4]), int(flat.min()),
+            int(flat.max()), dark, bright,
+            dark <= EXPOSURE_MAX_PPM and bright <= EXPOSURE_MAX_PPM,
+        )
 
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec, HIST_SCHEMA
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row, HIST_SCHEMA
     )
 
 
@@ -1428,51 +981,6 @@ PALETTE_SCHEMA = (
 )
 
 
-def synth_rgbstripe_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """North-rule-shaped corpus whose rows carry channel-distinct
-    stripes: row r of image i is the constant RGB
-    ((i*37+r*5)%251, (i*53+r*7)%251, (i*71+r*11)%251), w = 8+(i%5)*4,
-    h = 6+(i%7)*2, codec rotated by i%3, bytes truncated on i%9==4 —
-    every palette cell count is w × (rows hitting that cell), pure
-    arithmetic for the oracle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [],
-                   "fmt": [], "caption": [], "phash": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                w, h = 8 + (i % 5) * 4, 6 + (i % 7) * 2
-                r = np.arange(h)
-                chans = [
-                    ((i * 37 + r * 5) % 251).astype(np.uint8),
-                    ((i * 53 + r * 7) % 251).astype(np.uint8),
-                    ((i * 71 + r * 11) % 251).astype(np.uint8),
-                ]
-                arr = np.stack(
-                    [np.repeat(c[:, None], w, axis=1) for c in chans], axis=2
-                )
-                fmt = ("png", "jpeg", "gif")[i % 3]
-                data = imaging.encode_image(arr, fmt)
-                if i % 9 == 4:
-                    data = data[:6]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(data)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append(fmt)
-                out["caption"].append(f"stripe {i}")
-                out["phash"].append(0)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(
-        gen,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
-    )
-
-
 def color_palette(corpus: DataFrame, top_k: int = 3) -> DataFrame:
     """Decode → 64-cell joint RGB quantization → top-k dominant cells:
     one row per (image, rank≤k): (image_id, ok, rank, cell, pix_cnt,
@@ -1485,48 +993,26 @@ def color_palette(corpus: DataFrame, top_k: int = 3) -> DataFrame:
     the same flat plan shape as image_meta at any corpus size.
     """
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ok": [], "rank": [], "cell": [],
-                   "pix_cnt": [], "share_ppm": [], "n_colors": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["image_id"].append(iid)
-                    out["ok"].append(False)
-                    for k in ("rank", "cell", "pix_cnt", "share_ppm",
-                              "n_colors"):
-                        out[k].append(None)
-                    continue
-                cells = (
-                    (arr[:, :, 0] >> 6).astype(np.int32) * 16
-                    + (arr[:, :, 1] >> 6) * 4
-                    + (arr[:, :, 2] >> 6)
-                ).reshape(-1)
-                counts = np.bincount(cells, minlength=64)
-                total = int(cells.size)
-                n_colors = int((counts > 0).sum())
-                order = sorted(
-                    np.flatnonzero(counts), key=lambda c: (-counts[c], c)
-                )
-                for rank, c in enumerate(order[:top_k], start=1):
-                    out["image_id"].append(iid)
-                    out["ok"].append(True)
-                    out["rank"].append(rank)
-                    out["cell"].append(int(c))
-                    out["pix_cnt"].append(int(counts[c]))
-                    out["share_ppm"].append(
-                        1_000_000 * int(counts[c]) // total
-                    )
-                    out["n_colors"].append(n_colors)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield iid, False, None, None, None, None, None
+            return
+        cells = (
+            (arr[:, :, 0] >> 6).astype(np.int32) * 16
+            + (arr[:, :, 1] >> 6) * 4
+            + (arr[:, :, 2] >> 6)
+        ).reshape(-1)
+        counts = np.bincount(cells, minlength=64)
+        total = int(cells.size)
+        n_colors = int((counts > 0).sum())
+        order = sorted(np.flatnonzero(counts), key=lambda c: (-counts[c], c))
+        for rank, c in enumerate(order[:top_k], start=1):
+            n = int(counts[c])
+            yield iid, True, rank, int(c), n, 1_000_000 * n // total, n_colors
 
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec, PALETTE_SCHEMA
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row, PALETTE_SCHEMA
     )
 
 
@@ -1556,42 +1042,22 @@ def colorfulness(corpus: DataFrame) -> DataFrame:
     flat plan as image_meta/color_palette at any corpus size.
     """
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ok": [], "mean_rg_ppm": [],
-                   "mean_yb_ppm": [], "colorfulness_ppm": [],
-                   "grayscale": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["image_id"].append(iid)
-                    out["ok"].append(False)
-                    for k in ("mean_rg_ppm", "mean_yb_ppm",
-                              "colorfulness_ppm"):
-                        out[k].append(None)
-                    out["grayscale"].append(None)
-                    continue
-                px = arr.astype(np.int64)
-                r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-                sum_rg = int(np.abs(r - g).sum())
-                sum_yb = int(np.abs(r + g - 2 * b).sum())
-                n = int(arr.shape[0] * arr.shape[1])
-                m_rg = 1_000_000 * sum_rg // n
-                m_yb = 1_000_000 * sum_yb // (2 * n)
-                out["image_id"].append(iid)
-                out["ok"].append(True)
-                out["mean_rg_ppm"].append(m_rg)
-                out["mean_yb_ppm"].append(m_yb)
-                out["colorfulness_ppm"].append(m_rg + m_yb)
-                out["grayscale"].append(sum_rg == 0 and sum_yb == 0)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield iid, False, None, None, None, None
+            return
+        px = arr.astype(np.int64)
+        r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
+        sum_rg = int(np.abs(r - g).sum())
+        sum_yb = int(np.abs(r + g - 2 * b).sum())
+        n = int(arr.shape[0] * arr.shape[1])
+        m_rg = 1_000_000 * sum_rg // n
+        m_yb = 1_000_000 * sum_yb // (2 * n)
+        yield iid, True, m_rg, m_yb, m_rg + m_yb, sum_rg == 0 and sum_yb == 0
 
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec, COLORFULNESS_SCHEMA
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row, COLORFULNESS_SCHEMA
     )
 
 
@@ -1620,99 +1086,18 @@ def contrast_stats(corpus: DataFrame) -> DataFrame:
     plan as image_meta/colorfulness at any corpus size.
     """
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ok": [], "lum_min": [], "lum_max": [],
-                   "contrast": [], "low_contrast": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["image_id"].append(iid)
-                    out["ok"].append(False)
-                    for k in ("lum_min", "lum_max", "contrast",
-                              "low_contrast"):
-                        out[k].append(None)
-                    continue
-                px = arr.astype(np.int64)
-                lum = 2 * px[:, :, 0] + 5 * px[:, :, 1] + px[:, :, 2]
-                lo, hi = int(lum.min()), int(lum.max())
-                out["image_id"].append(iid)
-                out["ok"].append(True)
-                out["lum_min"].append(lo)
-                out["lum_max"].append(hi)
-                out["contrast"].append(hi - lo)
-                out["low_contrast"].append(hi - lo < LOW_CONTRAST_LT)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield iid, False, None, None, None, None
+            return
+        px = arr.astype(np.int64)
+        lum = 2 * px[:, :, 0] + 5 * px[:, :, 1] + px[:, :, 2]
+        lo, hi = int(lum.min()), int(lum.max())
+        yield iid, True, lo, hi, hi - lo, hi - lo < LOW_CONTRAST_LT
 
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec, CONTRAST_SCHEMA
-    )
-
-
-def synth_tiled_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Quadrant-structured corpus for crop-robust dedup: images come in
-    groups of 4 (g = id//4, one codec per GROUP so equal pixels stay
-    equal through the decode): v0 = the group's base 8×8 pattern
-    P(g,r,c) = (g·31 + r·5 + c·3) % 239, v1 = base with the
-    bottom-right quadrant shifted +8 (two lossy buckets — survives the
-    6-bit quantization), v2 = base with BOTH top quadrants shifted,
-    v3 = a fully distinct pattern.  Within a complete group the shared-
-    quadrant counts are exactly (v0,v1)=3, (v0,v2)=2, (v1,v2)=1 and 0
-    for every v3 pairing — pure structure for the oracle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [],
-                   "fmt": [], "caption": [], "phash": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                g, v = i // 4, i % 4
-                r = np.arange(8)[:, None]
-                c = np.arange(8)[None, :]
-                base = ((g * 31 + r * 5 + c * 3) % 239).astype(np.int64)
-                # group-id digits stamped into EVERY quadrant as 4k+2
-                # values (fixed points of the lossy recon, ≥4 apart for
-                # distinct digits — different buckets even through the
-                # 6-bit codec), so quadrants never collide across groups
-                # no matter how many groups the SF produces (g < 64^3)
-                digits = [
-                    (g % 64) * 4 + 2,
-                    ((g // 64) % 64) * 4 + 2,
-                    ((g // 4096) % 64) * 4 + 2,
-                ]
-                for quad_r, quad_c in ((0, 0), (0, 5), (5, 0), (5, 5)):
-                    for k, d in enumerate(digits):
-                        base[quad_r + k, quad_c + k] = d
-                if v == 3:
-                    px = (base + 97) % 239
-                else:
-                    px = base.copy()
-                    if v == 1:
-                        px[4:, 4:] = (px[4:, 4:] + 8) % 239
-                    elif v == 2:
-                        px[:4, :] = (px[:4, :] + 8) % 239
-                arr = np.repeat(
-                    px.astype(np.uint8)[:, :, None], 3, axis=2
-                )
-                fmt = ("png", "jpeg", "gif")[g % 3]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(imaging.encode_image(arr, fmt))
-                out["w"].append(8)
-                out["h"].append(8)
-                out["fmt"].append(fmt)
-                out["caption"].append(f"tile {i}")
-                out["phash"].append(0)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(
-        gen,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row, CONTRAST_SCHEMA
     )
 
 
@@ -1732,34 +1117,18 @@ def tile_neardup(corpus: DataFrame, min_shared: int = 2) -> DataFrame:
     AQE mitigation as the text inverted indexes (pipeline/dedup.py).
     """
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            return
+        h2, w2 = arr.shape[0] // 2, arr.shape[1] // 2
+        quads = [arr[:h2, :w2], arr[:h2, w2:], arr[h2:, :w2], arr[h2:, w2:]]
+        for q, quad in enumerate(quads):
+            yield iid, q, hashlib.md5(quad.tobytes()).hexdigest()[:16]
 
-        for pdf in batches:
-            out = {"image_id": [], "q": [], "qhash": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    continue
-                h2, w2 = arr.shape[0] // 2, arr.shape[1] // 2
-                quads = [
-                    arr[:h2, :w2], arr[:h2, w2:], arr[h2:, :w2],
-                    arr[h2:, w2:],
-                ]
-                for q, quad in enumerate(quads):
-                    out["image_id"].append(iid)
-                    out["q"].append(q)
-                    out["qhash"].append(
-                        hashlib.md5(quad.tobytes()).hexdigest()[:16]
-                    )
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    qh = corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec, "image_id string, q int, qhash string"
+    qh = map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row,
+        "image_id string, q int, qhash string",
     )
     a = qh.select(F.col("image_id").alias("id_a"), "q", "qhash")
     b = qh.select(F.col("image_id").alias("id_b"), "q", "qhash")
@@ -1769,61 +1138,6 @@ def tile_neardup(corpus: DataFrame, min_shared: int = 2) -> DataFrame:
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= int(min_shared))
-    )
-
-
-def synth_twin_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Candidate-pair corpus for the decode-verify stage: per id i, a
-    REFERENCE image (the channel-distinct stripe array of
-    synth_rgbstripe_corpus, lossless 'gif' container) and a CANDIDATE:
-    the identical array lossless on i%4==0 (exact twin), the same
-    array through the LOSSY codec on i%4==1 (codec-noise twin —
-    recon at bucket centers, error deterministic per pixel), and the
-    stripe array of i+13 otherwise (true non-dup, same dims).  Every
-    pixel of both sides is pure arithmetic for the oracle.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"pair_id": [], "bytes_a": [], "fmt_a": [],
-                   "bytes_b": [], "fmt_b": [], "w": [], "h": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                w, h = 8 + (i % 5) * 4, 6 + (i % 7) * 2
-
-                def stripes(j):
-                    r = np.arange(h)
-                    chans = [
-                        ((j * 37 + r * 5) % 251).astype(np.uint8),
-                        ((j * 53 + r * 7) % 251).astype(np.uint8),
-                        ((j * 71 + r * 11) % 251).astype(np.uint8),
-                    ]
-                    return np.stack(
-                        [np.repeat(c[:, None], w, axis=1) for c in chans],
-                        axis=2,
-                    )
-
-                a = stripes(i)
-                if i % 4 == 0:
-                    b, fmt_b = a, "gif"
-                elif i % 4 == 1:
-                    b, fmt_b = a, "jpeg"
-                else:
-                    b, fmt_b = stripes(i + 13), "gif"
-                out["pair_id"].append(f"pair_{i:06d}")
-                out["bytes_a"].append(imaging.encode_image(a, "gif"))
-                out["fmt_a"].append("gif")
-                out["bytes_b"].append(imaging.encode_image(b, fmt_b))
-                out["fmt_b"].append(fmt_b)
-                out["w"].append(w)
-                out["h"].append(h)
-            if out["pair_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(
-        gen,
-        "pair_id string, bytes_a binary, fmt_a string, "
-        "bytes_b binary, fmt_b string, w int, h int",
     )
 
 
@@ -1846,28 +1160,16 @@ def pixel_verify(pairs: DataFrame, mae_ppm_max: int = 20_000) -> DataFrame:
     the decode cost is O(candidates), never O(N²).
     """
 
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"pair_id": [], "n_px": [], "sad": [], "mae_ppm": [],
-                   "dup": []}
-            for _, row in pdf.iterrows():
-                a = imaging.decode_image(bytes(row["bytes_a"]), row["fmt_a"])
-                b = imaging.decode_image(bytes(row["bytes_b"]), row["fmt_b"])
-                sad = int(
-                    np.abs(a.astype(np.int32) - b.astype(np.int32)).sum()
-                )
-                n_px = int(a.shape[0] * a.shape[1])
-                mae_ppm = sad * 1_000_000 // (n_px * 3 * 255)
-                out["pair_id"].append(row["pair_id"])
-                out["n_px"].append(n_px)
-                out["sad"].append(sad)
-                out["mae_ppm"].append(mae_ppm)
-                out["dup"].append(mae_ppm <= int(mae_ppm_max))
-            if out["pair_id"]:
-                yield pd.DataFrame(out)
+    def row(pair_id, bytes_a, fmt_a, bytes_b, fmt_b):
+        a = imaging.decode_image(bytes(bytes_a), fmt_a)
+        b = imaging.decode_image(bytes(bytes_b), fmt_b)
+        sad = int(np.abs(a.astype(np.int32) - b.astype(np.int32)).sum())
+        n_px = int(a.shape[0] * a.shape[1])
+        mae_ppm = sad * 1_000_000 // (n_px * 3 * 255)
+        yield pair_id, n_px, sad, mae_ppm, mae_ppm <= int(mae_ppm_max)
 
-    return pairs.mapInPandas(
-        verify,
+    return map_rows(
+        pairs.select("pair_id", "bytes_a", "fmt_a", "bytes_b", "fmt_b"), row,
         "pair_id string, n_px long, sad long, mae_ppm long, dup boolean",
     )
 
@@ -2004,40 +1306,24 @@ def image_entropy(corpus: DataFrame) -> DataFrame:
     The entropy sum runs in fixed b0→b3 order so the oracle's DOUBLE
     arithmetic reproduces it bit-exactly.
     """
-    import math
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield iid, False, None, True
+            return
+        flat = arr.reshape(-1)
+        bins = np.bincount(flat // 64, minlength=4)
+        total = float(flat.size)
+        h = 0.0
+        for b in bins[:4]:
+            if int(b) > 0:
+                p = int(b) / total
+                h = h + p * math.log(p)
+        ent = round(-h, 6)
+        yield iid, True, ent, ent <= ENTROPY_FLAT_MAX
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ok": [], "entropy": [],
-                   "low_entropy": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                out["image_id"].append(iid)
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["ok"].append(False)
-                    out["entropy"].append(None)
-                    out["low_entropy"].append(True)
-                    continue
-                flat = arr.reshape(-1)
-                bins = np.bincount(flat // 64, minlength=4)
-                total = float(flat.size)
-                h = 0.0
-                for b in bins[:4]:
-                    if int(b) > 0:
-                        p = int(b) / total
-                        h = h + p * math.log(p)
-                ent = round(-h, 6)
-                out["ok"].append(True)
-                out["entropy"].append(ent)
-                out["low_entropy"].append(ent <= ENTROPY_FLAT_MAX)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec, ENTROPY_SCHEMA
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row, ENTROPY_SCHEMA
     )
 
 
@@ -2132,37 +1418,21 @@ def image_model_score(
     """
     w = dict(IMG_MODEL_WEIGHTS if weights is None else weights)
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "image_id": [], "ok": [], "ppm0": [], "ppm1": [],
-                "ppm2": [], "ppm3": [], "mean_luma": [],
-            }
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                out["image_id"].append(iid)
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["ok"].append(False)
-                    for c in ("ppm0", "ppm1", "ppm2", "ppm3", "mean_luma"):
-                        out[c].append(None)
-                    continue
-                flat = arr.reshape(-1).astype(np.int64)
-                bins = np.bincount(flat // 64, minlength=4)
-                total = int(flat.size)
-                out["ok"].append(True)
-                for bi in range(4):
-                    out[f"ppm{bi}"].append(
-                        int(bins[bi]) * 1_000_000 // total
-                    )
-                out["mean_luma"].append(int(flat.sum()) // total)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield iid, False, None, None, None, None, None
+            return
+        flat = arr.reshape(-1).astype(np.int64)
+        bins = np.bincount(flat // 64, minlength=4)
+        total = int(flat.size)
+        yield (
+            iid, True, *(int(bins[bi]) * 1_000_000 // total for bi in range(4)),
+            int(flat.sum()) // total,
+        )
 
-    feats = corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec, IMG_MODEL_SCHEMA
+    feats = map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row, IMG_MODEL_SCHEMA
     )
     spark = corpus.sparkSession
     wdf = spark.createDataFrame(
@@ -2208,69 +1478,6 @@ def image_model_score(
 # --------------------------------------------------------------------------
 
 
-def _splitmix64(n: np.ndarray) -> np.ndarray:
-    """SplitMix64 finalizer over uint64 — full-avalanche deterministic
-    noise for fixtures (a weaker multiplicative hash leaves the block
-    pattern monotone and every average-hash collides)."""
-    x = n + np.uint64(0x9E3779B97F4A7C15)
-    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return x ^ (x >> np.uint64(31))
-
-
-def synth_asym_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Asymmetric-content corpus for mirror-dedup: each image is a
-    distinct 8x8 splitmix64-hashed block pattern upscaled to >=32px
-    (block structure keeps the 8x8 average-hash fully informative —
-    verified 5000/5000 distinct canonical hashes, 0 accidentally
-    mirror-symmetric, at the largest driver-checked SF).  Rows with
-    i%10==7 are the HORIZONTAL MIRROR of image i-1 (lossless png), the
-    flipped-repost fixture; i%9==4 truncates bytes (decode-fail arm).
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [],
-                   "fmt": [], "caption": [], "phash": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                src = i - 1 if i % 10 == 7 else i
-                # >=32px on both axes so every 8x8 hash block has pixels
-                w, h = 32 + (src % 5) * 4, 32 + (src % 7) * 2
-                br = np.arange(8, dtype=np.uint64)[:, None]
-                bc = np.arange(8, dtype=np.uint64)[None, :]
-                n = (
-                    np.uint64(src) * np.uint64(64)
-                    + br * np.uint64(8)
-                    + bc
-                )
-                blocks = (_splitmix64(n) % np.uint64(251)).astype(np.uint8)
-                rows_m = np.arange(h) * 8 // h
-                cols_m = np.arange(w) * 8 // w
-                base = blocks[np.ix_(rows_m, cols_m)]
-                if i % 10 == 7:
-                    base = base[:, ::-1]
-                arr = np.stack([base] * 3, axis=2)
-                data = imaging.encode_image(arr, "png")
-                if i % 9 == 4:
-                    data = data[:6]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(data)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append("png")
-                out["caption"].append(f"asym {i}")
-                out["phash"].append(0)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(
-        gen,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
-    )
-
-
 def mirror_phash_pairs(corpus: DataFrame) -> DataFrame:
     """Mirror-invariant exact-phash duplicate pairs — catches the
     flipped repost, the single most common transform applied to stolen
@@ -2294,28 +1501,20 @@ def mirror_phash_pairs(corpus: DataFrame) -> DataFrame:
     group-by.
     """
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ph": [], "mph": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    continue
-                out["image_id"].append(iid)
-                out["ph"].append(imaging.phash64(arr))
-                out["mph"].append(imaging.phash64(arr[:, ::-1]))
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            return
+        yield iid, imaging.phash64(arr), imaging.phash64(arr[:, ::-1])
 
     # one read of the decode+hash pass: group on the canonical hash and
     # pair within each group, so no self-join re-reads (or caches) the
     # opaque mapInPandas stage
     groups = (
-        corpus.select("image_id", "bytes", "fmt")
-        .mapInPandas(scan, "image_id string, ph long, mph long")
+        map_rows(
+            corpus.select("image_id", "bytes", "fmt"), row,
+            "image_id string, ph long, mph long",
+        )
         .groupBy(F.least("ph", "mph").alias("canon"))
         .agg(F.collect_list(F.struct("image_id", "ph")).alias("m"))
         .filter(F.size("m") > 1)
@@ -2366,108 +1565,31 @@ def tile_periodicity(
     work per image.
     """
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ok": [], "best_period": [],
-                   "mismatch_ppm": [], "is_tiled": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                out["image_id"].append(iid)
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["ok"].append(False)
-                    out["best_period"].append(None)
-                    out["mismatch_ppm"].append(None)
-                    out["is_tiled"].append(False)
-                    continue
-                cols = arr.astype(np.int64).sum(axis=(0, 2))
-                w = cols.shape[0]
-                total = int(cols.sum())
-                best_p, best_mm = None, None
-                for p in range(min_period, max_period + 1):
-                    if w <= p:
-                        break
-                    mm = int(np.abs(cols[p:] - cols[:-p]).sum())
-                    if best_mm is None or mm < best_mm:
-                        best_p, best_mm = p, mm
-                if best_p is None or total == 0:
-                    out["ok"].append(True)
-                    out["best_period"].append(None)
-                    out["mismatch_ppm"].append(None)
-                    out["is_tiled"].append(False)
-                    continue
-                ppm = best_mm * 1_000_000 // total
-                out["ok"].append(True)
-                out["best_period"].append(best_p)
-                out["mismatch_ppm"].append(ppm)
-                out["is_tiled"].append(
-                    ppm <= TILE_PERIOD_MAX_MISMATCH_PPM
-                )
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield iid, False, None, None, False
+            return
+        cols = arr.astype(np.int64).sum(axis=(0, 2))
+        w = cols.shape[0]
+        total = int(cols.sum())
+        best_p, best_mm = None, None
+        for p in range(min_period, max_period + 1):
+            if w <= p:
+                break
+            mm = int(np.abs(cols[p:] - cols[:-p]).sum())
+            if best_mm is None or mm < best_mm:
+                best_p, best_mm = p, mm
+        if best_p is None or total == 0:
+            yield iid, True, None, None, False
+            return
+        ppm = best_mm * 1_000_000 // total
+        yield iid, True, best_p, ppm, ppm <= TILE_PERIOD_MAX_MISMATCH_PPM
 
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec,
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row,
         "image_id string, ok boolean, best_period int, "
         "mismatch_ppm long, is_tiled boolean",
-    )
-
-
-def synth_periodic_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Column-pattern corpus for tile_periodicity: every row and
-    channel identical, so column sums are pure arithmetic in (i, c).
-    Arms by i%3 — 0: period-4 tile pattern ((i*31 + (c%4)*37) % 251);
-    1: aperiodic md5 noise (int(md5(f"{i}:{c}")[:6],16) % 251 — md5 so
-    the ORACLE can price every column); 2: constant (i*13) % 251 (the
-    degenerate every-period case; 0 at i%251==0 exercises the
-    zero-mass guard).  w = 24+(i%5)*4 (always > max_period),
-    h = 4+(i%2)*2; bytes truncate on i%9==4.
-    """
-    import hashlib
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [],
-                   "fmt": [], "caption": [], "phash": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                w, h = 24 + (i % 5) * 4, 4 + (i % 2) * 2
-                arm = i % 3
-                if arm == 0:
-                    v = np.array(
-                        [(i * 31 + (c % 4) * 37) % 251 for c in range(w)]
-                    )
-                elif arm == 1:
-                    v = np.array([
-                        int(
-                            hashlib.md5(f"{i}:{c}".encode()).hexdigest()[:6],
-                            16,
-                        ) % 251
-                        for c in range(w)
-                    ])
-                else:
-                    v = np.full(w, (i * 13) % 251)
-                base = np.repeat(v[None, :].astype(np.uint8), h, axis=0)
-                arr = np.stack([base] * 3, axis=2)
-                data = imaging.encode_image(arr, "png")
-                if i % 9 == 4:
-                    data = data[:6]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(data)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append("png")
-                out["caption"].append(f"per {i}")
-                out["phash"].append(0)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(
-        gen,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
     )
 
 
@@ -2501,106 +1623,22 @@ def text_in_image(corpus: DataFrame) -> DataFrame:
     arithmetic only (both engines replay the jump counts exactly).
     """
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ok": [], "texty_rows": [],
-                   "n_rows": [], "text_ppm": [], "has_text": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                out["image_id"].append(iid)
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["ok"].append(False)
-                    out["texty_rows"].append(None)
-                    out["n_rows"].append(None)
-                    out["text_ppm"].append(None)
-                    out["has_text"].append(False)
-                    continue
-                g = arr.astype(np.int64).sum(axis=2) // 3  # mean luma
-                h, w = g.shape
-                jumps = (np.abs(np.diff(g, axis=1)) >= 64).sum(axis=1)
-                texty = ((8 * jumps >= w) & (20 * jumps <= 9 * w)).sum()
-                ppm = int(texty) * 1_000_000 // h
-                out["ok"].append(True)
-                out["texty_rows"].append(int(texty))
-                out["n_rows"].append(h)
-                out["text_ppm"].append(ppm)
-                out["has_text"].append(ppm >= TEXT_ROW_MIN_PPM)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield iid, False, None, None, None, False
+            return
+        g = arr.astype(np.int64).sum(axis=2) // 3  # mean luma
+        h, w = g.shape
+        jumps = (np.abs(np.diff(g, axis=1)) >= 64).sum(axis=1)
+        texty = int(((8 * jumps >= w) & (20 * jumps <= 9 * w)).sum())
+        ppm = texty * 1_000_000 // h
+        yield iid, True, texty, h, ppm, ppm >= TEXT_ROW_MIN_PPM
 
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec,
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row,
         "image_id string, ok boolean, texty_rows int, n_rows int, "
         "text_ppm long, has_text boolean",
-    )
-
-
-def synth_textband_corpus(spark, ids_df: DataFrame) -> DataFrame:
-    """Row-banded corpus for text_in_image, every pixel arithmetic in
-    (i, r, c) so the oracle replays the jump counts: arms by i%3 —
-    0: a middle-third band of period-3 black/white glyph stripes over
-    a constant background (the meme-caption shape; exactly h/3 texty
-    rows); 1: a smooth +4/column ramp (no jumps >= 64); 2: md5 pixel
-    noise, identical across rows (jumps on ~55% of columns — above the
-    texty band, the sensor-noise decoy).  h = 9 + (i%2)*3,
-    w = 24 + (i%5)*4; bytes truncate on i%9==4.
-    """
-    import hashlib
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [],
-                   "fmt": [], "caption": [], "phash": []}
-            for i in pdf["id"].astype(int):
-                i = int(i)
-                w, h = 24 + (i % 5) * 4, 9 + (i % 2) * 3
-                arm = i % 3
-                if arm == 0:
-                    stripe = np.array(
-                        [255 if (c // 3) % 2 else 0 for c in range(w)],
-                        dtype=np.uint8,
-                    )
-                    bg = np.full(w, (i * 7) % 128, dtype=np.uint8)
-                    rows = [
-                        stripe if h // 3 <= r < 2 * (h // 3) else bg
-                        for r in range(h)
-                    ]
-                    base = np.stack(rows)
-                elif arm == 1:
-                    v = np.minimum(np.arange(w) * 4 + (i % 50), 250)
-                    base = np.repeat(
-                        v[None, :].astype(np.uint8), h, axis=0
-                    )
-                else:
-                    v = np.array([
-                        int(
-                            hashlib.md5(f"{i}:{c}".encode()).hexdigest()[:6],
-                            16,
-                        ) % 251
-                        for c in range(w)
-                    ], dtype=np.uint8)
-                    base = np.repeat(v[None, :], h, axis=0)
-                arr = np.stack([base] * 3, axis=2)
-                data = imaging.encode_image(arr, "png")
-                if i % 9 == 4:
-                    data = data[:6]
-                out["image_id"].append(f"img_{i:06d}")
-                out["bytes"].append(data)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append("png")
-                out["caption"].append(f"band {i}")
-                out["phash"].append(0)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
-
-    return spread_scan(ids_df).mapInPandas(
-        gen,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
     )
 
 
@@ -2633,45 +1671,27 @@ def corner_overlay(corpus: DataFrame) -> DataFrame:
     min/max folds only — both engines replay the tile ranges exactly.
     """
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "ok": [], "flat_corners": [],
-                   "global_range": [], "has_overlay": []}
-            for iid, data, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"]
-            ):
-                out["image_id"].append(iid)
-                try:
-                    arr = imaging.decode_image(bytes(data), fmt)
-                except Exception:
-                    out["ok"].append(False)
-                    out["flat_corners"].append(None)
-                    out["global_range"].append(None)
-                    out["has_overlay"].append(False)
-                    continue
-                g = arr.astype(np.int64).sum(axis=2) // 3
-                h, w = g.shape
-                th, tw = max(h // 4, 1), max(w // 4, 1)
-                tiles = [
-                    g[:th, :tw], g[:th, w - tw:],
-                    g[h - th:, :tw], g[h - th:, w - tw:],
-                ]
-                flat = sum(
-                    1 for t in tiles
-                    if int(t.max()) - int(t.min()) <= OVERLAY_FLAT_MAX
-                )
-                grange = int(g.max()) - int(g.min())
-                out["ok"].append(True)
-                out["flat_corners"].append(flat)
-                out["global_range"].append(grange)
-                out["has_overlay"].append(
-                    flat >= 1 and grange >= OVERLAY_GLOBAL_MIN
-                )
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def row(iid, data, fmt):
+        arr = _decode(data, fmt)
+        if arr is None:
+            yield iid, False, None, None, False
+            return
+        g = arr.astype(np.int64).sum(axis=2) // 3
+        h, w = g.shape
+        th, tw = max(h // 4, 1), max(w // 4, 1)
+        tiles = [
+            g[:th, :tw], g[:th, w - tw:],
+            g[h - th:, :tw], g[h - th:, w - tw:],
+        ]
+        flat = sum(
+            1 for t in tiles
+            if int(t.max()) - int(t.min()) <= OVERLAY_FLAT_MAX
+        )
+        grange = int(g.max()) - int(g.min())
+        yield iid, True, flat, grange, flat >= 1 and grange >= OVERLAY_GLOBAL_MIN
 
-    return corpus.select("image_id", "bytes", "fmt").mapInPandas(
-        dec,
+    return map_rows(
+        corpus.select("image_id", "bytes", "fmt"), row,
         "image_id string, ok boolean, flat_corners int, "
         "global_range long, has_overlay boolean",
     )

@@ -8,8 +8,8 @@ corpus (BASELINE.json input_hint).  The reference only HEAD-checks images
 capability.
 
 Implementation: equi-join fetched image rows to `web` (body) and `corpus`
-(reference bytes + caption), then one `mapInPandas` Arrow pass that decodes
-both sides per batch and emits scalar metrics — bytes never survive the
+(reference bytes + caption), then one `map_rows` Arrow pass that decodes
+both sides per row and emits scalar metrics — bytes never survive the
 stage, so the shuffle after validation carries only
 (image_id, psnr, flags), not pixels (SURVEY.md §7 "binary image bytes
 inflating shuffles").
@@ -17,14 +17,11 @@ inflating shuffles").
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkkchecker_net_spark import imaging
+from linkkchecker_net_spark.pipeline._parallel import map_rows
 from linkkchecker_net_spark.reports.reports import IMAGE_MIMES
 
 VALIDATION_SCHEMA = (
@@ -35,48 +32,30 @@ VALIDATION_SCHEMA = (
 PSNR_GATE_DB = 40.0
 
 
-def _validate_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {
-            "image_id": [],
-            "url": [],
-            "fmt": [],
-            "psnr": [],
-            "psnr_ok": [],
-            "caption_ok": [],
-            "phash_dist": [],
-            "valid": [],
-        }
-        for row in pdf.itertuples(index=False):
-            psnr = float("nan")
-            psnr_ok = False
-            phash_dist = -1
-            try:
-                fetched = imaging.decode_image(bytes(row.body), row.fmt)
-                ref = imaging.decode_image(bytes(row.ref_bytes), row.fmt)
-                if fetched.shape == ref.shape:
-                    psnr = imaging.psnr(fetched, ref)
-                    psnr_ok = bool(psnr >= PSNR_GATE_DB)
-                phash_dist = imaging.hamming64(
-                    imaging.phash64(fetched), int(row.ref_phash)
-                )
-            except Exception:
-                pass
-            caption_ok = (
-                row.web_caption is not None
-                and row.ref_caption is not None
-                and row.web_caption == row.ref_caption
-            )
-            out["image_id"].append(row.image_id)
-            out["url"].append(row.url)
-            out["fmt"].append(row.fmt)
-            out["psnr"].append(psnr)
-            out["psnr_ok"].append(psnr_ok)
-            out["caption_ok"].append(bool(caption_ok))
-            out["phash_dist"].append(phash_dist)
-            out["valid"].append(psnr_ok and bool(caption_ok))
-        if out["image_id"]:
-            yield pd.DataFrame(out)
+def _validate_row(
+    image_id, url, fmt, body, web_caption, ref_bytes, ref_caption, ref_phash
+):
+    psnr = float("nan")
+    psnr_ok = False
+    phash_dist = -1
+    try:
+        fetched = imaging.decode_image(bytes(body), fmt)
+        ref = imaging.decode_image(bytes(ref_bytes), fmt)
+        if fetched.shape == ref.shape:
+            psnr = imaging.psnr(fetched, ref)
+            psnr_ok = bool(psnr >= PSNR_GATE_DB)
+        phash_dist = imaging.hamming64(imaging.phash64(fetched), int(ref_phash))
+    except Exception:
+        pass
+    caption_ok = bool(
+        web_caption is not None
+        and ref_caption is not None
+        and web_caption == ref_caption
+    )
+    yield (
+        image_id, url, fmt, psnr, psnr_ok, caption_ok, phash_dist,
+        psnr_ok and caption_ok,
+    )
 
 
 def validate_images(
@@ -100,4 +79,11 @@ def validate_images(
         F.col("phash").alias("ref_phash"),
     )
     joined = fetched.join(w, "url", "inner").join(c, "image_id", "inner")
-    return joined.mapInPandas(_validate_batches, VALIDATION_SCHEMA)
+    return map_rows(
+        joined.select(
+            "image_id", "url", "fmt", "body", "web_caption", "ref_bytes",
+            "ref_caption", "ref_phash",
+        ),
+        _validate_row,
+        VALIDATION_SCHEMA,
+    )

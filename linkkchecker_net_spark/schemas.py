@@ -9,10 +9,6 @@ Reference data-model provenance:
                (/root/reference/SpiderEngine/Engine.cs:242-252)
   * results  — ScanResult analog
                (/root/reference/SpiderInterface/ScanResult.cs:6-12)
-  * frontier — explicit replacement for the reference's implicit task-tree
-               work queue (/root/reference/SpiderEngine/Engine.cs:334-346)
-  * seen     — Dictionary<Uri, ScanResult> key-set analog
-               (/root/reference/SpiderInterface/ScanResults.cs:12-14)
 """
 
 from __future__ import annotations
@@ -50,31 +46,6 @@ WEB = T.StructType(
 )
 
 # --- crawl state tables ---------------------------------------------------
-FRONTIER = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("host_hash", T.LongType(), False),
-        T.StructField("priority", T.IntegerType(), False),
-        T.StructField("crawl_depth", T.IntegerType(), False),
-        T.StructField("parent_url", T.StringType(), True),
-        T.StructField("seed_url", T.StringType(), True),
-        T.StructField("may_contain_links", T.BooleanType(), False),
-        T.StructField("expand_links", T.BooleanType(), False),
-        T.StructField("discovery_rank", T.LongType(), False),
-    ]
-)
-
-SEEN = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("first_depth", T.IntegerType(), False),
-        T.StructField("epoch", T.IntegerType(), False),
-    ]
-)
-
 RESULTS = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -91,20 +62,6 @@ RESULTS = T.StructType(
         T.StructField("discovery_rank", T.LongType(), False),
         T.StructField("epoch", T.IntegerType(), False),
         T.StructField("image_id", T.StringType(), True),
-    ]
-)
-
-# page-level single-node extractions (canonical href, meta description,
-# embedded css) — one row per fetched 2xx text/html page
-PAGE_META = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("canonical_href", T.StringType(), True),
-        T.StructField("meta_description", T.StringType(), True),
-        T.StructField("embedded_css", T.ArrayType(T.StringType()), True),
-        T.StructField("crawl_depth", T.IntegerType(), False),
-        T.StructField("epoch", T.IntegerType(), False),
     ]
 )
 

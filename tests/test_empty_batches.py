@@ -61,7 +61,6 @@ def test_pandas_empty_list_column_still_broken():
 
 def test_image_kernels_empty_batch():
     from linkkchecker_net_spark.pipeline import multimodal
-    from linkkchecker_net_spark.reports import image_validation
 
     empty_corpus = _empty_like({"image_id": object, "fmt": object, "bytes": object})
     # grab the inner kernels through their public wrappers by invoking the
@@ -75,5 +74,26 @@ def test_image_kernels_empty_batch():
         assert "if rows[" in src or "if out[" in src or "if ids" in src, (
             f"{modfn.__name__} lost its empty-batch guard"
         )
-    src = inspect.getsource(image_validation)
-    assert 'if out["image_id"]' in src
+
+
+def test_map_rows_batch_function():
+    # every other per-image pass runs through map_rows, whose batch
+    # function owns the guard: no frame for a batch that yields no rows
+    from linkkchecker_net_spark.pipeline._parallel import row_batches
+
+    def fn(image_id, n):
+        for k in range(n):
+            yield image_id, None
+
+    run = row_batches(fn, ["image_id", "w"])
+    empty = _empty_like({"image_id": object, "n": "int64"})
+    assert list(run(iter([empty]))) == []
+    silent = pd.DataFrame({"image_id": ["a", "b"], "n": [0, 0]})
+    assert list(run(iter([silent]))) == []
+    (out,) = run(iter([pd.DataFrame({"image_id": ["a", "b"], "n": [2, 0]})]))
+    assert out.values.tolist() == [["a", None], ["a", None]]
+    # an all-None nullable int column still converts under the schema
+    table = pa.Table.from_pandas(
+        out, schema=pa.schema([("image_id", pa.string()), ("w", pa.int32())])
+    )
+    assert table.column("w").null_count == 2

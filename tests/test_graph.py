@@ -166,8 +166,13 @@ def test_trustrank_empty_teleport_raises(spark):
     nodes = spark.createDataFrame([("a",)], "url string")
     e = spark.createDataFrame([], "src string, dst string")
     t = spark.createDataFrame([], "url string")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
     with pytest.raises(ValueError):
         pagerank(nodes, e, teleport=t)
+    # the raise comes before the edge table is persisted, so no cache
+    # entry is left registered behind it
+    assert cache.cachedData().size() == before
 
 
 def test_priority_from_rank_log_buckets(spark):

@@ -61,10 +61,8 @@ def test_laplacian_sharpness_flat_tiny_and_striped(spark):
     """Flat frame → zero energy; <3px image → interior 0 (guarded, not
     a crash); one striped id matches the closed-form 540·(32/s−1)·Δ²."""
     import pandas as pd
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        laplacian_sharpness,
-        synth_striped_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import laplacian_sharpness
+    from linkkchecker_net_spark.fixtures.images import synth_striped_corpus
 
     flat = imaging.encode_image(
         np.full((8, 8, 3), 77, dtype=np.uint8), "png"
@@ -246,10 +244,8 @@ def test_pixel_verify_codec_noise_vs_distinct(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        pixel_verify,
-        synth_twin_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import pixel_verify
+    from linkkchecker_net_spark.fixtures.images import synth_twin_corpus
 
     ids = spark.range(12).select(F.col("id").cast("long").alias("id"))
     out = {r["pair_id"]: r for r in pixel_verify(
@@ -419,10 +415,8 @@ def test_mirror_phash_pairs_catches_flip_and_reupload(spark, new_cached_rdds):
     call."""
     import numpy as np
 
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        _splitmix64,
-        mirror_phash_pairs,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import mirror_phash_pairs
+    from linkkchecker_net_spark.fixtures.images import _splitmix64
 
     def blocks(seed):
         n = (

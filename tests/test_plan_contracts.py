@@ -706,10 +706,8 @@ def test_session_r5b_ops_plan_shapes(spark):
     window); image_model_score broadcasts its 5-row weight table."""
     from linkkchecker_net_spark.kernels.httpmeta import alt_svc_audit
     from linkkchecker_net_spark.pipeline.dedup import lsh_advisor
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        image_model_score,
-        synth_rowgrad_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import image_model_score
+    from linkkchecker_net_spark.fixtures.images import synth_rowgrad_corpus
     from linkkchecker_net_spark.reports.seo import hotlink_audit
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")

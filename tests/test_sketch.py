@@ -91,10 +91,8 @@ def test_cms_unseen_token_zero_floor(spark):
 def test_clip_alignment_real_phash(spark):
     """Over the real decode-pass corpus (synth_corpus phash): scores in
     [-1, 1], full anchoring (one verdict per image), deterministic."""
-    from linkkchecker_net_spark.pipeline.multimodal import (
-        clip_alignment,
-        synth_corpus,
-    )
+    from linkkchecker_net_spark.pipeline.multimodal import clip_alignment
+    from linkkchecker_net_spark.fixtures.images import synth_corpus
 
     ids = spark.range(40).select(F.col("id"))
     corpus = synth_corpus(spark, ids).persist()

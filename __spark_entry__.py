@@ -726,13 +726,12 @@ def q_image_clusters(spark, sf_dir):
 
 def _quality_fixture_corpus(spark, sf_dir):
     """Image corpus whose decoded dimensions are ARITHMETIC in doc_id
-    (w = 16 + 3i mod 33, h = 16 + 5i mod 33) so DuckDB can oracle
-    resolution/aspect gates, while Spark must earn w/h by decoding the
-    bytes; doc_id % 13 == 11 payloads are truncated to 4 bytes
-    (undecodable) to exercise the decode_ok=false branch."""
-    import numpy as np
-
-    from linkkchecker_net_spark import imaging
+    (w = 16 + 3i mod 33, h = 16 + 5i mod 33; see
+    fixtures.images.arith_dims_image) so DuckDB can oracle resolution/
+    aspect gates, while Spark must earn w/h by decoding the bytes;
+    doc_id % 13 == 11 payloads are truncated to 4 bytes (undecodable) to
+    exercise the decode_ok=false branch."""
+    from linkkchecker_net_spark.fixtures.images import arith_dims_image
     from linkkchecker_net_spark.pipeline._parallel import map_rows
 
     ids = _docs(spark, sf_dir).filter(F.col("doc_id") < 300).select(
@@ -741,11 +740,7 @@ def _quality_fixture_corpus(spark, sf_dir):
 
     def row(i):
         i = int(i)
-        w = 16 + (i * 3) % 33
-        h = 16 + (i * 5) % 33
-        fmt = ("png", "jpeg", "gif")[i % 3]
-        arr = imaging.make_image(np.random.default_rng(5_000_011 + i), w, h)
-        data = imaging.encode_image(arr, fmt)
+        data, fmt = arith_dims_image(i)
         if i % 13 == 11:
             data = data[:4]
         yield f"img_{i:06d}", data, fmt
@@ -884,9 +879,7 @@ def _image_funnel_fixture_corpus(spark, sf_dir):
     pairs {(i-1, i) : i % 9 == 4} and canonicality is arithmetic.
     Truncated (undecodable) payloads carry the source id in their tail so
     two truncated images never collide on the 4-byte format signature."""
-    import numpy as np
-
-    from linkkchecker_net_spark import imaging
+    from linkkchecker_net_spark.fixtures.images import arith_dims_image
     from linkkchecker_net_spark.pipeline._parallel import map_rows
 
     ids = _docs(spark, sf_dir).filter(F.col("doc_id") < 300).select(
@@ -896,11 +889,7 @@ def _image_funnel_fixture_corpus(spark, sf_dir):
     def row(i):
         i = int(i)
         src = i - 1 if i % 9 == 4 else i
-        w = 16 + (src * 3) % 33
-        h = 16 + (src * 5) % 33
-        fmt = ("png", "jpeg", "gif")[src % 3]
-        arr = imaging.make_image(np.random.default_rng(5_000_011 + src), w, h)
-        data = imaging.encode_image(arr, fmt)
+        data, fmt = arith_dims_image(src)
         if src % 13 == 11:
             data = data[:4] + src.to_bytes(4, "big")
         yield f"img_{i:06d}", data, fmt

@@ -459,8 +459,10 @@ def run_leg(cores: int, pages: int, images: int, trials: int = 1) -> None:
 # bracketing probes read >MEMBW_TOL below the best-known-clean bandwidth
 # for this box ran in a bandwidth-stolen window and is rejected — the same
 # pattern the steal gate applies to CPU theft.  The best-known reading
-# persists in BENCH/membw_ref.json so the reference survives across runs
-# (a fully-contended bench run cannot silently lower its own bar).
+# persists so the reference survives across runs (a fully-contended bench
+# run cannot silently lower its own bar): a run ratchets the git-ignored
+# BENCH/local/membw_ref.json and reads the max of it and the committed
+# BENCH/membw_ref.json, which no run rewrites.
 #
 # TOLERANCE CALIBRATION (r4, measured): the reference RATCHETS to the
 # box's all-time-best probe (11.6 GB/s), while clean-window probes spread
@@ -470,8 +472,12 @@ def run_leg(cores: int, pages: int, images: int, trials: int = 1) -> None:
 # bandwidth signature is FAR below 75% of best-ever — so the default band
 # is 25%: wide enough for clean drift, still a wall against real theft.
 
-_MEMBW_REF_FILE = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH", "membw_ref.json"
+_BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
+# what a run writes goes under BENCH/local/, which git ignores
+_LOCAL_DIR = os.path.join(_BENCH_DIR, "local")
+_MEMBW_REF_FILES = (
+    os.path.join(_BENCH_DIR, "membw_ref.json"),
+    os.path.join(_LOCAL_DIR, "membw_ref.json"),
 )
 MEMBW_TOL = float(os.environ.get("SPARK_GRAFT_BENCH_MEMBW_TOL", 0.25))
 _membw_bufs = None
@@ -501,35 +507,43 @@ def _membw_probe() -> float:
     return best
 
 
-def _membw_ref() -> float:
-    """Best-known-clean bandwidth: max(persisted calibration, best probe
-    this process).  0.0 disables the gate (first run on a fresh box gates
-    against its own best-so-far)."""
-    stored = 0.0
+def _stored_membw(path: str) -> float:
     try:
-        with open(_MEMBW_REF_FILE) as f:
-            stored = float(json.load(f).get("gbps", 0.0))
+        with open(path) as f:
+            return float(json.load(f).get("gbps", 0.0))
     except (OSError, ValueError):
-        pass
-    return max(stored, _membw_best_seen)
+        return 0.0
+
+
+def _membw_ref() -> float:
+    """Best-known-clean bandwidth: max(committed and local calibrations,
+    best probe this process).  0.0 disables the gate (first run on a fresh
+    box gates against its own best-so-far)."""
+    return max(*map(_stored_membw, _MEMBW_REF_FILES), _membw_best_seen)
 
 
 def _membw_save_ref(val: float) -> None:
-    try:
-        with open(_MEMBW_REF_FILE) as f:
-            cur = float(json.load(f).get("gbps", 0.0))
-    except (OSError, ValueError):
-        cur = 0.0
-    if val <= cur:
+    local = _MEMBW_REF_FILES[1]
+    if val <= _stored_membw(local):
         return
     try:
-        os.makedirs(os.path.dirname(_MEMBW_REF_FILE), exist_ok=True)
-        tmp = _MEMBW_REF_FILE + ".tmp"
+        os.makedirs(_LOCAL_DIR, exist_ok=True)
+        tmp = local + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"gbps": val, "probe": "numpy add 3x192MB best-of-3"}, f)
-        os.replace(tmp, _MEMBW_REF_FILE)
+        os.replace(tmp, local)
     except OSError:
         pass
+
+
+def _detail_path() -> str:
+    """Where a run writes its per-query detail: BENCH/queries_r{N}.json for
+    SPARK_GRAFT_ROUND=N, else the git-ignored BENCH/local/queries.json, so
+    a run without a round number never rewrites a committed round's file."""
+    round_n = os.environ.get("SPARK_GRAFT_ROUND")
+    if round_n:
+        return os.path.join(_BENCH_DIR, f"queries_r{round_n}.json")
+    return os.path.join(_LOCAL_DIR, "queries.json")
 
 
 def _measure_gated(fn):
@@ -920,12 +934,7 @@ def main() -> None:
     # BENCH/queries_r{N}.json and the printed line stays compact: the
     # headline, the eff pair, per-level rates + gates, and the two
     # macro-job timings under "queries".
-    round_n = os.environ.get("SPARK_GRAFT_ROUND", "5")
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "BENCH",
-        f"queries_r{round_n}.json",
-    )
+    detail_path = _detail_path()
     try:
         os.makedirs(os.path.dirname(detail_path), exist_ok=True)
         with open(detail_path, "w") as f:

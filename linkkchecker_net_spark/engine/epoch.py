@@ -46,7 +46,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from linkkchecker_net_spark import schemas
 from linkkchecker_net_spark.kernels import fused
 from linkkchecker_net_spark.kernels.classify import classification_expr
 

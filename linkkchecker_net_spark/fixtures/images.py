@@ -55,6 +55,16 @@ def _dims(i: int) -> tuple[int, int]:
     return 8 + (i % 5) * 4, 6 + (i % 7) * 2
 
 
+def arith_dims_image(i: int) -> tuple[bytes, str]:
+    """Encoded image ``i`` of the arithmetic-dims entry fixtures and its
+    fmt: w = 16 + 3i mod 33, h = 16 + 5i mod 33, codec by i % 3."""
+    w = 16 + (i * 3) % 33
+    h = 16 + (i * 5) % 33
+    fmt = FMTS[i % 3]
+    arr = imaging.make_image(np.random.default_rng(5_000_011 + i), w, h)
+    return imaging.encode_image(arr, fmt), fmt
+
+
 def _rowgrad(i: int) -> np.ndarray:
     """Row gradient: value (i*37 + row) % 251 on every channel/column."""
     w, h = _dims(i)

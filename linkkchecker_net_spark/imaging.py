@@ -21,12 +21,14 @@ In production these three branches would call a real codec inside the same
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
 import numpy as np
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+_EPS = float(np.finfo(np.float64).eps)
 
 
 def _png_chunk(tag: bytes, payload: bytes) -> bytes:
@@ -147,27 +149,108 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     return 10.0 * np.log10(255.0 * 255.0 / mse)
 
 
-def phash64(arr: np.ndarray) -> int:
+def channel_sum(arr: np.ndarray) -> np.ndarray:
+    """Per-pixel ``r + g + b`` of an (h, w, 3) uint8 image, exact in int32."""
+    s = arr[..., 0].astype(np.int32)
+    s += arr[..., 1]
+    s += arr[..., 2]
+    return s
+
+
+@functools.lru_cache(maxsize=2048)
+def _grid(h: int, w: int, ny: int, nx: int) -> tuple:
+    """Row starts, column starts, ``3 ×`` block pixel counts and the float
+    tolerance of the ``np.linspace`` block grid ``ny × nx`` over an
+    ``h × w`` image.
+
+    The tolerance bounds how far a comparison of two gray block means
+    may be off between the per-block float loop and the exact block sums
+    here.  The loop's block mean is off the true one by at most about
+    ``(n + 1)·u·255`` for an ``n``-pixel block (one rounding per pixel of
+    gray, one per addition, one for the division; ``u`` is half an ulp of
+    1), and its mean of 64 means by another ``64·u·255``; each mean here
+    is the true one rounded once.  Two such values compared, against the
+    same two here, err by less than ``255·eps·(n_max + 128)``: a
+    comparison farther apart than that has the same sign in both."""
+    ys = np.linspace(0, h, ny + 1).astype(int)
+    xs = np.linspace(0, w, nx + 1).astype(int)
+    n = np.outer(np.diff(ys), np.diff(xs))
+    grid = ys[:-1], xs[:-1], 3 * n
+    for a in grid:  # shared by every caller through the cache
+        a.flags.writeable = False
+    return (*grid, 255 * _EPS * (int(n.max()) + 128))
+
+
+def _block_means(s: np.ndarray, ny: int, nx: int) -> tuple:
+    """Gray block means of a channel-sum image over its ``ny × nx`` grid,
+    from exact integer block sums, and the grid's tolerance."""
+    y0, x0, n3, tol = _grid(*s.shape, ny, nx)
+    sums = np.add.reduceat(np.add.reduceat(s, x0, axis=1, dtype=np.int64), y0, axis=0)
+    return sums / n3, tol
+
+
+def _pack64(bits: np.ndarray) -> int:
+    """64 bits, row-major and most significant first, as a signed int64."""
+    return int(np.packbits(bits).view(">i8")[0])
+
+
+def _loop_block_means(arr: np.ndarray, ny: int, nx: int) -> np.ndarray:
+    gray = arr.astype(np.float64).mean(axis=2)
+    h, w = gray.shape
+    ys = np.linspace(0, h, ny + 1).astype(int)
+    xs = np.linspace(0, w, nx + 1).astype(int)
+    m = np.empty((ny, nx))
+    for i in range(ny):
+        for j in range(nx):
+            m[i, j] = gray[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean()
+    return m
+
+
+def _phash64_loop(arr: np.ndarray) -> int:
+    """Reference average hash: one float mean per block."""
+    m = _loop_block_means(arr, 8, 8)
+    return _pack64(m > m.mean())
+
+
+def _dhash64_loop(arr: np.ndarray) -> int:
+    """Reference difference hash: one float mean per block."""
+    m = _loop_block_means(arr, 8, 9)
+    return _pack64(m[:, 1:] > m[:, :-1])
+
+
+def _is_rgb8(arr: np.ndarray) -> bool:
+    return arr.dtype == np.uint8 and arr.ndim == 3 and arr.shape[2] == 3
+
+
+def phash64(arr: np.ndarray, s: np.ndarray | None = None) -> int:
     """64-bit average-hash: grayscale → 8×8 block means → mean threshold.
 
     Deterministic, numpy-only perceptual hash (signed int64 so it fits a
-    Spark LongType column).
+    Spark LongType column).  Blocks are the ``np.linspace(0, n, 9)`` grid
+    of each side, gray is the channel mean, and bit ``8i + j`` (most
+    significant first) is block ``(i, j)``'s mean above the mean of all
+    64.  ``s`` is :func:`channel_sum` of ``arr`` when the caller has it.
+
+    Exactness contract: the result equals the per-block float loop
+    (``_phash64_loop``) on every input.  Block sums are exact integers;
+    when a block mean lies within the loop's float error of the overall
+    mean (constant and two-level images, see :func:`_grid`), the
+    loop itself decides.  A side under 8 px leaves a row or column of
+    the grid empty, and the hash is 0, as the loop's NaN means give.
+    Inputs other than (h, w, 3) uint8 take the loop.
     """
-    gray = arr.astype(np.float64).mean(axis=2)
-    h, w = gray.shape
-    ys = np.linspace(0, h, 9).astype(int)
-    xs = np.linspace(0, w, 9).astype(int)
-    blocks = np.empty((8, 8))
-    for i in range(8):
-        for j in range(8):
-            blocks[i, j] = gray[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean()
-    bits = (blocks > blocks.mean()).flatten()
-    val = 0
-    for bit in bits:
-        val = (val << 1) | int(bit)
-    if val >= 1 << 63:
-        val -= 1 << 64
-    return val
+    if not _is_rgb8(arr):
+        return _phash64_loop(arr)
+    h, w = arr.shape[:2]
+    if h < 8 or w < 8:
+        return 0
+    if s is None:
+        s = channel_sum(arr)
+    m, tol = _block_means(s, 8, 8)
+    d = m - m.mean()
+    if np.abs(d).min() <= tol:
+        return _phash64_loop(arr)
+    return _pack64(d > 0)
 
 
 def hamming64(a: int, b: int) -> int:
@@ -201,19 +284,19 @@ def dhash64(arr: np.ndarray) -> int:
     gradient STRUCTURE, phash on global brightness layout — the pair
     disagrees exactly on the uniform-brightness-shift edits that defeat
     one of them alone.
+
+    Exactness contract: as :func:`phash64`, the result equals the
+    per-block float loop (``_dhash64_loop``) on every input, and an
+    adjacent pair of block means within the loop's float error of each
+    other goes to the loop.  A side under 8 px high or 9 px wide leaves
+    blocks empty; those grids go to the loop too, whose NaN comparisons
+    give mixed bits (a 5×40 image hashes to a non-zero value).
     """
-    gray = arr.astype(np.float64).mean(axis=2)
-    h, w = gray.shape
-    ys = np.linspace(0, h, 9).astype(int)
-    xs = np.linspace(0, w, 10).astype(int)
-    m = np.empty((8, 9))
-    for i in range(8):
-        for j in range(9):
-            m[i, j] = gray[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean()
-    bits = (m[:, 1:] > m[:, :-1]).flatten()
-    val = 0
-    for bit in bits:
-        val = (val << 1) | int(bit)
-    if val >= 1 << 63:
-        val -= 1 << 64
-    return val
+    h, w = arr.shape[:2]
+    if not _is_rgb8(arr) or h < 8 or w < 9:
+        return _dhash64_loop(arr)
+    m, tol = _block_means(channel_sum(arr), 8, 9)
+    d = m[:, 1:] - m[:, :-1]
+    if np.abs(d).min() <= tol:
+        return _dhash64_loop(arr)
+    return _pack64(d > 0)

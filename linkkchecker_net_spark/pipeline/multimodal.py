@@ -32,23 +32,45 @@ IMAGE_META_SCHEMA = (
 )
 
 
-def _image_features(arr: np.ndarray) -> dict:
+# the 16 luma histogram bins as ranges of the channel sum: bin(s) is
+# ``s / 3 / 16`` in float32, clipped, which is monotone in ``s``
+_HIST_STARTS = np.searchsorted(
+    (np.arange(766, dtype=np.float32) / np.float32(3) / 16).astype(np.int32).clip(0, 15),
+    np.arange(16),
+)
+
+
+def _image_features(arr: np.ndarray, s: np.ndarray | None = None) -> dict:
     """Feature battery over decoded pixels — the quality/dedup signals a
     training-data pipeline extracts per image (luma stats, gradient edge
-    density, histogram entropy, thumbnail phash for near-dup blocking)."""
-    gray = arr.astype(np.float32).mean(axis=2)
+    density, histogram entropy, thumbnail phash for near-dup blocking).
+    ``s`` is ``imaging.channel_sum(arr)`` when the caller has it.
+
+    Gray is the float32 channel mean: a sum of three bytes is exact in
+    float32, so ``s / 3`` rounds once, as ``mean(axis=2)`` does, and a
+    gray value's histogram bin depends on ``s`` alone.  An image
+    with a 0-px side has no pixels: its features are NaN and its
+    thumbnail hash 0."""
+    h, w = arr.shape[:2]
+    if h == 0 or w == 0:
+        return dict(
+            mean_luma=math.nan, luma_var=math.nan, edge_density=math.nan,
+            hist_entropy=math.nan, thumb_phash=0,
+        )
+    if s is None:
+        s = imaging.channel_sum(arr)
+    gray = s.astype(np.float32) / np.float32(3)
     mean_luma = float(gray.mean())
     luma_var = float(gray.var())
     gx = np.abs(np.diff(gray, axis=1)).mean()
     gy = np.abs(np.diff(gray, axis=0)).mean()
     edge_density = float(gx + gy)
-    hist = np.bincount((gray.ravel() / 16).astype(np.int32).clip(0, 15), minlength=16)
+    hist = np.add.reduceat(np.bincount(s.ravel(), minlength=766), _HIST_STARTS)
     p = hist / max(hist.sum(), 1)
     p = p[p > 0]
     hist_entropy = float(-(p * np.log2(p)).sum())
-    h, w = gray.shape
-    ys = (np.arange(32) * h // 32).clip(0, h - 1)
-    xs = (np.arange(32) * w // 32).clip(0, w - 1)
+    ys = np.arange(32) * h // 32
+    xs = np.arange(32) * w // 32
     thumb = arr[ys][:, xs]
     return dict(
         mean_luma=mean_luma,
@@ -119,15 +141,14 @@ def image_metadata(
                 feats = dict.fromkeys(feat_names, nan)
                 if feat_names:
                     feats["thumb_phash"] = 0
-                try:
-                    arr = imaging.decode_image(data, r.fmt)
+                arr = _decode(data, r.fmt)
+                if arr is not None:
                     ok, (h, w) = True, arr.shape[:2]
                     if want_phash:
-                        ph = imaging.phash64(arr)
+                        s = imaging.channel_sum(arr)
+                        ph = imaging.phash64(arr, s)
                     if feat_names:
-                        feats = _image_features(arr)
-                except Exception:
-                    pass
+                        feats = _image_features(arr, s)
                 rows["image_id"].append(r.image_id)
                 rows["fmt"].append(r.fmt)
                 rows["n_bytes"].append(len(data))

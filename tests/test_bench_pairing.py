@@ -97,3 +97,25 @@ def test_missing_leg_rounds_are_skipped(bench):
     rounds = [(0, 1, _leg(1000.0))]  # high leg never ran
     pair_rounds, best = bench.paired_efficiency(rounds, low=1, high=4)
     assert pair_rounds == [] and best is None
+
+
+def test_runs_write_only_git_ignored_files(bench, tmp_path, monkeypatch):
+    """The membw ratchet writes the local calibration and reads the max of
+    it and the committed one; the per-query detail of a run without a
+    round number lands beside it, not on a committed round's file."""
+    committed, local = tmp_path / "membw_ref.json", tmp_path / "local" / "membw_ref.json"
+    committed.write_text('{"gbps": 12.0}')
+    monkeypatch.setattr(bench, "_BENCH_DIR", str(tmp_path))
+    monkeypatch.setattr(bench, "_LOCAL_DIR", str(local.parent))
+    monkeypatch.setattr(bench, "_MEMBW_REF_FILES", (str(committed), str(local)))
+    monkeypatch.setattr(bench, "_membw_best_seen", 0.0)
+    bench._membw_save_ref(9.0)
+    assert bench._membw_ref() == 12.0
+    bench._membw_save_ref(14.5)
+    bench._membw_save_ref(13.0)
+    assert committed.read_text() == '{"gbps": 12.0}'
+    assert bench._membw_ref() == 14.5
+    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+    assert bench._detail_path() == str(local.parent / "queries.json")
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "7")
+    assert bench._detail_path() == str(tmp_path / "queries_r7.json")

@@ -5,12 +5,13 @@ compare row multisets (column-name-aligned, order-insensitive)."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"

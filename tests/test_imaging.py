@@ -562,3 +562,174 @@ def test_corner_overlay_arms(spark):
     assert f["flat_corners"] == 4 and f["has_overlay"] is False
     assert out["trunc"]["ok"] is False
     assert out["trunc"]["has_overlay"] is False
+
+
+# ------------------------------------------------- vectorized hash exactness
+# The spec: phash64, dhash64 and _image_features as they were with one
+# float mean per block, copied verbatim (the thumbnail hash calls the spec
+# phash).  The vectorized kernels must give the same output on every input.
+def _spec_phash64(arr: np.ndarray) -> int:
+    gray = arr.astype(np.float64).mean(axis=2)
+    h, w = gray.shape
+    ys = np.linspace(0, h, 9).astype(int)
+    xs = np.linspace(0, w, 9).astype(int)
+    blocks = np.empty((8, 8))
+    for i in range(8):
+        for j in range(8):
+            blocks[i, j] = gray[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean()
+    bits = (blocks > blocks.mean()).flatten()
+    val = 0
+    for bit in bits:
+        val = (val << 1) | int(bit)
+    if val >= 1 << 63:
+        val -= 1 << 64
+    return val
+
+
+def _spec_dhash64(arr: np.ndarray) -> int:
+    gray = arr.astype(np.float64).mean(axis=2)
+    h, w = gray.shape
+    ys = np.linspace(0, h, 9).astype(int)
+    xs = np.linspace(0, w, 10).astype(int)
+    m = np.empty((8, 9))
+    for i in range(8):
+        for j in range(9):
+            m[i, j] = gray[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean()
+    bits = (m[:, 1:] > m[:, :-1]).flatten()
+    val = 0
+    for bit in bits:
+        val = (val << 1) | int(bit)
+    if val >= 1 << 63:
+        val -= 1 << 64
+    return val
+
+
+def _spec_image_features(arr: np.ndarray) -> dict:
+    gray = arr.astype(np.float32).mean(axis=2)
+    mean_luma = float(gray.mean())
+    luma_var = float(gray.var())
+    gx = np.abs(np.diff(gray, axis=1)).mean()
+    gy = np.abs(np.diff(gray, axis=0)).mean()
+    edge_density = float(gx + gy)
+    hist = np.bincount((gray.ravel() / 16).astype(np.int32).clip(0, 15), minlength=16)
+    p = hist / max(hist.sum(), 1)
+    p = p[p > 0]
+    hist_entropy = float(-(p * np.log2(p)).sum())
+    h, w = gray.shape
+    ys = (np.arange(32) * h // 32).clip(0, h - 1)
+    xs = (np.arange(32) * w // 32).clip(0, w - 1)
+    thumb = arr[ys][:, xs]
+    return dict(
+        mean_luma=mean_luma,
+        luma_var=luma_var,
+        edge_density=edge_density,
+        hist_entropy=hist_entropy,
+        thumb_phash=_spec_phash64(thumb),
+    )
+
+
+def _spec_feature_row(arr: np.ndarray) -> dict:
+    # a 0-px side raised at the thumbnail index, and image_metadata wrote
+    # its defaults: NaN features, thumb_phash 0
+    try:
+        return _spec_image_features(arr)
+    except IndexError:
+        nan = float("nan")
+        return dict(mean_luma=nan, luma_var=nan, edge_density=nan,
+                    hist_entropy=nan, thumb_phash=0)
+
+
+def _exactness_images() -> list:
+    rng = np.random.default_rng(20261019)
+    out = []
+    # validate-shaped images through all three codecs, and their mirrors
+    sides = (48, 64, 96, 128, 160, 192, 224, 256)
+    for i in range(72):
+        w, h = (sides[i % 8] + int(d) for d in rng.integers(-4, 5, size=2))
+        fmt = ("png", "jpeg", "gif")[(i // 8) % 3]
+        arr = imaging.make_image(rng, w, h)
+        arr = imaging.decode_image(imaging.encode_image(arr, fmt), fmt)
+        out += [arr, arr[:, ::-1]]
+    # every side 0-300, both ways round
+    for s in range(301):
+        out.append(imaging.make_image(rng, s, 300 - s))
+        out.append(imaging.make_image(rng, (s * 37) % 97, s))
+    for v in range(256):
+        n = 1 + v % 40
+        # constant images whose gray v/3 is not representable
+        out.append(np.full((n + 3, n, 3), (v, 0, 0), np.uint8))
+        out.append(np.full((n, n + 5, 3), (v, (v * 7) % 256, 1), np.uint8))
+        # two-level: one column band, one row band
+        a = np.zeros((8 + v % 57, 8 + v % 61, 3), np.uint8)
+        a[:, : 1 + v % a.shape[1]] = (v, 1, 2)
+        out += [a, a.transpose(1, 0, 2)]
+        # stripes and a checkerboard of period 1-4
+        k = 1 + v % 4
+        yy, xx = np.indices(a.shape[:2])
+        out.append(np.where(((yy // k) % 2)[..., None] == 1, a, 255 - v).astype(np.uint8))
+        out.append((((yy // k + xx // k) % 2)[..., None] * np.array([v, 3, 5])).astype(np.uint8))
+    return out
+
+
+def _same(a, b) -> bool:
+    if isinstance(b, float) and np.isnan(b):
+        return isinstance(a, float) and np.isnan(a)
+    return type(a) is type(b) and a == b
+
+
+def test_vectorized_hashes_and_features_match_the_loop_spec():
+    import warnings
+
+    from linkkchecker_net_spark.pipeline.multimodal import _image_features
+
+    bad = []
+    with warnings.catch_warnings():
+        # the spec warns on empty blocks, gradients and thumbnail indices
+        warnings.simplefilter("ignore")
+        for arr in _exactness_images():
+            # image_metadata passes the channel sum it computed once
+            s = imaging.channel_sum(arr)
+            ph = _spec_phash64(arr)
+            if not imaging.phash64(arr) == imaging.phash64(arr, s) == ph:
+                bad.append(("phash64", arr.shape))
+            if imaging.dhash64(arr) != _spec_dhash64(arr):
+                bad.append(("dhash64", arr.shape))
+            want = _spec_feature_row(arr)
+            for got in (_image_features(arr), _image_features(arr, s)):
+                if got.keys() != want.keys() or not all(_same(got[k], want[k]) for k in want):
+                    bad.append(("features", arr.shape))
+    assert bad == []
+
+
+def test_image_metadata_degenerate_sides_keep_their_rows(spark):
+    """Images with a side under 8 px, or of 0 px, decode in all three
+    codecs and keep the rows the loop spec gives: phash 0, and for a
+    0-px side NaN features and thumb_phash 0."""
+    import warnings
+
+    from linkkchecker_net_spark.pipeline.multimodal import image_metadata
+
+    rows = []
+    for h, w in ((0, 40), (40, 0), (1, 1), (5, 40), (7, 7)):
+        arr = imaging.make_image(np.random.default_rng(100 * h + w), w, h)
+        for fmt in ("png", "jpeg", "gif"):
+            data = bytearray(imaging.encode_image(arr, fmt))
+            rows.append((f"{h}x{w}.{fmt}", data, fmt))
+    df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
+    got = {r["image_id"]: r.asDict() for r in image_metadata(df).collect()}
+    assert len(got) == len(rows)
+    for iid, data, fmt in rows:
+        arr = imaging.decode_image(bytes(data), fmt)
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")
+            want = dict(
+                image_id=iid, fmt=fmt, n_bytes=len(data), w=arr.shape[1],
+                h=arr.shape[0], decode_ok=True, phash=_spec_phash64(arr),
+                **_spec_feature_row(arr),
+            )
+        assert want["phash"] == 0
+        if 0 in arr.shape:
+            assert want["thumb_phash"] == 0 and np.isnan(want["mean_luma"])
+        # a NaN feature reaches Spark as NULL
+        want = {k: None if _same(v, float("nan")) else v for k, v in want.items()}
+        assert got[iid] == want

@@ -21,7 +21,6 @@ In production these three branches would call a real codec inside the same
 
 from __future__ import annotations
 
-import functools
 import struct
 import zlib
 
@@ -157,11 +156,10 @@ def channel_sum(arr: np.ndarray) -> np.ndarray:
     return s
 
 
-@functools.lru_cache(maxsize=2048)
-def _grid(h: int, w: int, ny: int, nx: int) -> tuple:
-    """Row starts, column starts, ``3 ×`` block pixel counts and the float
-    tolerance of the ``np.linspace`` block grid ``ny × nx`` over an
-    ``h × w`` image.
+def _block_means(s: np.ndarray, ny: int, nx: int) -> tuple:
+    """Gray block means of a channel-sum image over its ``np.linspace``
+    grid of ``ny × nx`` blocks, from exact integer block sums, and the
+    float tolerance of a comparison between two of them.
 
     The tolerance bounds how far a comparison of two gray block means
     may be off between the per-block float loop and the exact block sums
@@ -172,21 +170,14 @@ def _grid(h: int, w: int, ny: int, nx: int) -> tuple:
     is the true one rounded once.  Two such values compared, against the
     same two here, err by less than ``255·eps·(n_max + 128)``: a
     comparison farther apart than that has the same sign in both."""
+    h, w = s.shape
     ys = np.linspace(0, h, ny + 1).astype(int)
     xs = np.linspace(0, w, nx + 1).astype(int)
     n = np.outer(np.diff(ys), np.diff(xs))
-    grid = ys[:-1], xs[:-1], 3 * n
-    for a in grid:  # shared by every caller through the cache
-        a.flags.writeable = False
-    return (*grid, 255 * _EPS * (int(n.max()) + 128))
-
-
-def _block_means(s: np.ndarray, ny: int, nx: int) -> tuple:
-    """Gray block means of a channel-sum image over its ``ny × nx`` grid,
-    from exact integer block sums, and the grid's tolerance."""
-    y0, x0, n3, tol = _grid(*s.shape, ny, nx)
-    sums = np.add.reduceat(np.add.reduceat(s, x0, axis=1, dtype=np.int64), y0, axis=0)
-    return sums / n3, tol
+    sums = np.add.reduceat(
+        np.add.reduceat(s, xs[:-1], axis=1, dtype=np.int64), ys[:-1], axis=0
+    )
+    return sums / (3 * n), 255 * _EPS * (int(n.max()) + 128)
 
 
 def _pack64(bits: np.ndarray) -> int:
@@ -218,35 +209,27 @@ def _dhash64_loop(arr: np.ndarray) -> int:
     return _pack64(m[:, 1:] > m[:, :-1])
 
 
-def _is_rgb8(arr: np.ndarray) -> bool:
-    return arr.dtype == np.uint8 and arr.ndim == 3 and arr.shape[2] == 3
-
-
-def phash64(arr: np.ndarray, s: np.ndarray | None = None) -> int:
+def phash64(arr: np.ndarray) -> int:
     """64-bit average-hash: grayscale → 8×8 block means → mean threshold.
 
     Deterministic, numpy-only perceptual hash (signed int64 so it fits a
     Spark LongType column).  Blocks are the ``np.linspace(0, n, 9)`` grid
     of each side, gray is the channel mean, and bit ``8i + j`` (most
     significant first) is block ``(i, j)``'s mean above the mean of all
-    64.  ``s`` is :func:`channel_sum` of ``arr`` when the caller has it.
+    64.  The input is an (h, w, 3) uint8 image, as :func:`decode_image`
+    returns.
 
     Exactness contract: the result equals the per-block float loop
-    (``_phash64_loop``) on every input.  Block sums are exact integers;
+    (``_phash64_loop``) on every such input.  Block sums are exact integers;
     when a block mean lies within the loop's float error of the overall
-    mean (constant and two-level images, see :func:`_grid`), the
+    mean (constant and two-level images, see :func:`_block_means`), the
     loop itself decides.  A side under 8 px leaves a row or column of
     the grid empty, and the hash is 0, as the loop's NaN means give.
-    Inputs other than (h, w, 3) uint8 take the loop.
     """
-    if not _is_rgb8(arr):
-        return _phash64_loop(arr)
     h, w = arr.shape[:2]
     if h < 8 or w < 8:
         return 0
-    if s is None:
-        s = channel_sum(arr)
-    m, tol = _block_means(s, 8, 8)
+    m, tol = _block_means(channel_sum(arr), 8, 8)
     d = m - m.mean()
     if np.abs(d).min() <= tol:
         return _phash64_loop(arr)
@@ -286,14 +269,15 @@ def dhash64(arr: np.ndarray) -> int:
     one of them alone.
 
     Exactness contract: as :func:`phash64`, the result equals the
-    per-block float loop (``_dhash64_loop``) on every input, and an
-    adjacent pair of block means within the loop's float error of each
-    other goes to the loop.  A side under 8 px high or 9 px wide leaves
-    blocks empty; those grids go to the loop too, whose NaN comparisons
-    give mixed bits (a 5×40 image hashes to a non-zero value).
+    per-block float loop (``_dhash64_loop``) on every (h, w, 3) uint8
+    input, and an adjacent pair of block means within the loop's float
+    error of each other goes to the loop.  A side under 8 px high or
+    9 px wide leaves blocks empty; those grids go to the loop too, whose
+    NaN comparisons give mixed bits (a 5×40 image hashes to a non-zero
+    value).
     """
     h, w = arr.shape[:2]
-    if not _is_rgb8(arr) or h < 8 or w < 9:
+    if h < 8 or w < 9:
         return _dhash64_loop(arr)
     m, tol = _block_means(channel_sum(arr), 8, 9)
     d = m[:, 1:] - m[:, :-1]

@@ -40,11 +40,10 @@ _HIST_STARTS = np.searchsorted(
 )
 
 
-def _image_features(arr: np.ndarray, s: np.ndarray | None = None) -> dict:
+def _image_features(arr: np.ndarray) -> dict:
     """Feature battery over decoded pixels — the quality/dedup signals a
     training-data pipeline extracts per image (luma stats, gradient edge
     density, histogram entropy, thumbnail phash for near-dup blocking).
-    ``s`` is ``imaging.channel_sum(arr)`` when the caller has it.
 
     Gray is the float32 channel mean: a sum of three bytes is exact in
     float32, so ``s / 3`` rounds once, as ``mean(axis=2)`` does, and a
@@ -57,8 +56,7 @@ def _image_features(arr: np.ndarray, s: np.ndarray | None = None) -> dict:
             mean_luma=math.nan, luma_var=math.nan, edge_density=math.nan,
             hist_entropy=math.nan, thumb_phash=0,
         )
-    if s is None:
-        s = imaging.channel_sum(arr)
+    s = imaging.channel_sum(arr)
     gray = s.astype(np.float32) / np.float32(3)
     mean_luma = float(gray.mean())
     luma_var = float(gray.var())
@@ -145,10 +143,9 @@ def image_metadata(
                 if arr is not None:
                     ok, (h, w) = True, arr.shape[:2]
                     if want_phash:
-                        s = imaging.channel_sum(arr)
-                        ph = imaging.phash64(arr, s)
+                        ph = imaging.phash64(arr)
                     if feat_names:
-                        feats = _image_features(arr, s)
+                        feats = _image_features(arr)
                 rows["image_id"].append(r.image_id)
                 rows["fmt"].append(r.fmt)
                 rows["n_bytes"].append(len(data))
